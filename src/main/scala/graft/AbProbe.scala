@@ -14,14 +14,32 @@ package graft
   *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.AbProbe g20_kcore g35_coreness"
   */
 object AbProbe {
+  /** `key=value[,key=value...]`; a comma splits only where the next
+    * `key=` starts, so a value may itself contain commas. */
+  def parseConfs(spec: String): Seq[(String, String)] =
+    spec.split(",(?=[^,=]+=)").toSeq.filter(_.contains('=')).map { kv =>
+      val Array(k, v) = kv.split("=", 2); (k.trim, v.trim)
+    }
+
+  /** Run `body` with `confs` set, then put back each key's exact prior
+    * value — unset only a key that was absent — so a later A rep sees
+    * the session's own value, not Spark's built-in default. */
+  def withConfs[T](spark: org.apache.spark.sql.SparkSession,
+      confs: Seq[(String, String)])(body: => T): T = {
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("GRAFT_PROBE_REPS", "3").toInt
-    val confs = sys.env.getOrElse("GRAFT_AB_CONF", "")
-      .split(',').filter(_.contains('=')).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k.trim, v.trim)
-      }.toSeq
+    val confs = parseConfs(sys.env.getOrElse("GRAFT_AB_CONF", ""))
     require(confs.nonEmpty, "set GRAFT_AB_CONF=key=value[,key=value...]")
     val names = if (args.nonEmpty) args.toSeq else sys.error("pass query names")
     val spark = GraftSession.local(cpus, cpus)
@@ -37,9 +55,7 @@ object AbProbe {
       val b = scala.collection.mutable.ArrayBuffer.empty[Double]
       (1 to reps).foreach { _ =>
         a += timeOnce(n)
-        confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        try b += timeOnce(n)
-        finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+        b += withConfs(spark, confs)(timeOnce(n))
       }
       (n, a.toSeq, b.toSeq)
     }

@@ -81,7 +81,7 @@ object GraphOps {
   // thresholded at k, exactly d6/dg>=3 on the oracle side.
   //
   // Two regimes (optimization r14, r13 verdict #5 — guide §2.4 remove
-  // shuffles outright). Under `spark.graft.peel.broadcastCap` edge
+  // shuffles outright). Under `spark.graft.graph.broadcastCap` edge
   // rows (default 8M ⇒ alive ≤ V ≤ E ≤ 8M rows ≈ ≤128 MB broadcast),
   // BOTH membership joins take the alive set as an EXPLICIT broadcast:
   // the cached E-row table never enters an exchange (the old AQE
@@ -100,8 +100,7 @@ object GraphOps {
     // law ScaleTrail re-executes at sf10 where the unrolled oracle
     // can't follow (the pagerankFrom resume analog).
     val spark = sym.sparkSession
-    val smallGraph = graft.util.Loops.memoRows(sym) <=
-      longConf(spark, "spark.graft.graph.broadcastCap", 8000000L)
+    val smallGraph = graft.util.Loops.memoRows(sym) <= graphBroadcastCap(spark)
     if (smallGraph) graft.util.Loops.quiet(spark) {
       var alive = start.getOrElse(sym.select(col("src").as("n")).distinct())
       var deg = spark.emptyDataFrame
@@ -394,6 +393,86 @@ object GraphOps {
        |WHERE s.src IS NULL
        |ORDER BY node_a, node_b""".stripMargin
 
+  // ---- the BFS kernel: g6, g18, g27 and g40's distributed sweep ----
+  /** Multi-source level-synchronous BFS over sym, the paper's
+    * PathFinderNodeCountingRunner.java:22 bounded shortest-path search.
+    * Maps tagged seeds `(tag, node)` to first-reach levels
+    * `(tag, node, dist)` with `dist` ≤ `maxDepth`: every tag runs its
+    * own BFS (one constant tag merges the sources into one min-dist
+    * field). Tags ride the frontier key, so K tags cost K× one BFS's
+    * frontier volume, never K× rounds or a K-fold edge replication;
+    * state is ≤ K·V rows. Per hop one frontier ⋈ sym expansion, one
+    * distinct, one per-tag anti-join against the seen set (a lazy
+    * union of the levels), so a settled node never re-expands and a
+    * hop costs O(E). The loop stops at the first empty level — every
+    * later level would be empty too.
+    *
+    * Levels are DfCache-owned under `key` (`<key>_level_<h>`), not bare
+    * persists: repeated calls reuse one set and session eviction frees
+    * them (PersistHygieneSpec). Each level, seeds included, is a lazy
+    * `localCheckpoint(false)` materialized by the hop's own `count()`,
+    * which runs after `DfCache.cached` returns — one job per hop, none
+    * under the cache lock. `dist` is data in the checkpoint, never a
+    * plan literal: when only the seed level exists (an edgeless seed
+    * set), Catalyst would otherwise fold a caller's expression over it
+    * — g18's `12 div dist` failed planning with a divide by zero on
+    * an empty graph. The checkpoint also truncates lineage: without
+    * it each level's logical plan nests every earlier one, Catalyst
+    * analysis grows ~2^h, and the driver burned ~40 s planning g27's
+    * hop 6 at sf0.1. The count is the driver stop-check and sizes the
+    * next hop's broadcasts (the g10/g12 one-scalar convergence
+    * precedent).
+    *
+    * Two regimes (the kcorePeel gate; per-join broadcast-or-partition
+    * by operand size, the SPARQL-on-Spark rule). With sym at or under
+    * `spark.graft.graph.broadcastCap` edge rows, the hops run AQE-quiet
+    * and the frontier and seen sides are EXPLICITLY broadcast while
+    * their row counts (known from the hop counts; seen is bounded by
+    * K·V, not by E) stay under the same cap — the cached E-row table
+    * never enters an exchange and the plan is deterministic. Over the
+    * cap (a 100 TB graph, whose K·V frontier can't broadcast) the
+    * per-hop-AQE shuffle shape runs. Round-10 notes on g40's sweep (the
+    * paths not taken): a hop costs ~0.5 s at sf0.1 FLAT in frontier
+    * size — the full 12M-row sym scan behind the broadcast expansion
+    * join, not reducer scheduling — so a composed stride-2 lazy block
+    * (the minLabelFixpoint trick) measured 38 s vs ~11 s (AQE re-plans
+    * each reference to the intra-block level as its own exchange and
+    * re-ran the expansion 3×), and AQE partition coalescing measured
+    * 29–52 s (the fat middle hop collapsed to ~1 task). */
+  private def bfsLevels(spark: SparkSession, dir: String, key: String,
+      maxDepth: Int)(seeds: => DataFrame): DataFrame = {
+    val sym = withSym(spark, dir)
+    val cap = graphBroadcastCap(spark)
+    val small = graft.util.Loops.memoRows(sym) <= cap
+    def bc(df: DataFrame, rows: Long): DataFrame =
+      if (small && rows <= cap) broadcast(df) else df
+    def level(h: Int)(rows: => DataFrame): (DataFrame, Long) = {
+      val l = graft.util.DfCache.cached(spark, dir, s"${key}_level_$h") {
+        rows.select(col("tag"), col("node"), lit(h).as("dist")).localCheckpoint(false)
+      }
+      (l, l.count())
+    }
+    def hops(): DataFrame = {
+      val (l0, n0) = level(0)(seeds)
+      var levels = Vector(l0)
+      var frontierRows = n0
+      var seenRows = n0
+      while (levels.size <= maxDepth && frontierRows > 0L) {
+        val seen = levels.reduce(_.union(_))
+        val (nxt, rows) = level(levels.size) {
+          bc(levels.last, frontierRows).join(sym, col("node") === col("src"))
+            .select(col("tag"), col("dst").as("node")).distinct()
+            .join(bc(seen, seenRows), Seq("tag", "node"), "left_anti")
+        }
+        frontierRows = rows
+        seenRows += rows
+        if (rows > 0L) levels :+= nxt
+      }
+      levels.reduce(_.union(_))
+    }
+    if (small) graft.util.Loops.quiet(spark)(hops()) else hops()
+  }
+
   // ---- g40: pseudo-diameter (double-sweep BFS lower bound) ----
   // The classic two-sweep heuristic (Magnien, Latapy & Habib 2009):
   // BFS from an arbitrary node, re-BFS from the farthest node found —
@@ -402,51 +481,9 @@ object GraphOps {
   // min(node); sweep 2 at (max dist, then min node). Hop cap 8
   // (mirrored in the oracle's recursion bound) — this entity graph's
   // diameter is far below it, and the cap bounds worst-case rounds on
-  // a pathological chain. Per hop one frontier ⋈ sym join + anti-join
-  // against the seen set, localCheckpoint per level (the g6/g27
-  // planning-blowup lesson); the per-hop driver stop-check is a
-  // one-scalar count, the g10/g12 convergence-loop precedent. Cost is
-  // O(E) per hop — the frontier never re-expands settled nodes.
-  // This distributed loop is g40's OVER-CAP path; the gated scales
-  // take the bounded-component driver fast path below. Round-10
-  // measurement notes (the paths not taken, kept on record): the
-  // per-hop wall cost at sf0.1 is ~0.5 s FLAT regardless of frontier
-  // size — it is the full 12M-row sym scan behind the broadcast
-  // expansion join, not reducer scheduling — so (a) a composed
-  // stride-2 lazy block (the minLabelFixpoint trick) measured 38 s
-  // steady-state vs ~11 s (AQE re-plans each reference to the
-  // intra-block level as its own exchange: the "saved" barrier re-ran
-  // the expansion 3×), and (b) AQE partition coalescing for the sweep
-  // measured 29–52 s (the fat middle hop collapsed to ~1 task).
-  private def bfsDistsFrom(spark: SparkSession, dir: String,
-      seed: DataFrame): DataFrame = {
-    val sym = withSym(spark, dir)
-    graft.util.Loops.quiet(spark, graft.util.Loops.memoRows(sym)) {
-    val d0 = seed.select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    var pieces = Vector(d0)
-    var seen: DataFrame = d0.select(col("node"))
-    var frontier = d0.select(col("node"))
-    var cnt = 1L
-    var h = 1L
-    while (h <= 8L && cnt > 0L) {
-      // lazy checkpoint: the hop's own count is the materializing
-      // action — one job per hop instead of checkpoint-then-count
-      val nxt = frontier.join(sym, col("node") === col("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(seen, Seq("node"), "left_anti")
-        .select(col("node"), lit(h).as("dist"))
-        .localCheckpoint(false)
-      cnt = nxt.count()
-      if (cnt > 0L) {
-        pieces = pieces :+ nxt
-        seen = seen.union(nxt.select(col("node")))
-        frontier = nxt.select(col("node"))
-      }
-      h += 1
-    }
-    pieces.reduce(_.union(_))
-  } }
+  // a pathological chain. Each sweep is one single-tag `bfsLevels`;
+  // this distributed double sweep is g40's OVER-CAP path, the gated
+  // scales take the bounded-component driver fast path below.
 
   // Seed-component driver caps (the g45/g46 bounded-hybrid precedent:
   // component-sized collect behind explicit caps, never corpus rows,
@@ -463,6 +500,12 @@ object GraphOps {
     * both paths (Round11PlanSpec). */
   private def longConf(spark: SparkSession, key: String, dflt: Long): Long =
     spark.conf.getOption(key).map(_.toLong).getOrElse(dflt)
+
+  /** `spark.graft.graph.broadcastCap`: the row count at or under which
+    * the graph loops (kcorePeel, bfsLevels) take their broadcast regime.
+    * 8M rows of two longs ≈ a ≤128 MB broadcast side. */
+  private def graphBroadcastCap(spark: SparkSession): Long =
+    longConf(spark, "spark.graft.graph.broadcastCap", 8000000L)
 
   /** Level-synchronous BFS over a CSR core: distances from seedIdx,
     * capped at maxHops; returns (dist array, ecc, reached count). */
@@ -594,12 +637,14 @@ object GraphOps {
   }
 
   private[graft] def g40Distributed(spark: SparkSession, dir: String): DataFrame = {
-    val sym = withSym(spark, dir)
-    val seed1 = sym.agg(min(col("src")).as("node"))
-    val d1 = bfsDistsFrom(spark, dir, seed1)
+    def sweep(key: String, seed: DataFrame): DataFrame =
+      bfsLevels(spark, dir, key, 8)(seed.select(lit(0L).as("tag"), col("node")))
+        .select(col("node"), col("dist").cast("long").as("dist"))
+    val seed1 = withSym(spark, dir).agg(min(col("src")).as("node"))
+    val d1 = sweep("g40_sweep1", seed1)
     val far = d1.orderBy(col("dist").desc, col("node")).limit(1)
       .select(col("node"))
-    val d2 = bfsDistsFrom(spark, dir, far)
+    val d2 = sweep("g40_sweep2", far)
     val s1 = d1.agg(max(col("dist")).as("ecc_seed"),
       count(lit(1)).as("n_reached_seed"))
     val s2 = d2.agg(max(col("dist")).as("ecc_far"),
@@ -1375,39 +1420,13 @@ object GraphOps {
   }
 
   // ---- g6: multi-source k-hop BFS distances from region nodes ----
-  // Frontier BFS: each level is cached once; the cumulative
-  // "reached" set is a lazy union of the cached levels (never
-  // re-materialized), so iteration h does one join + one distinct +
-  // one anti-join over already-cached inputs. The level vectors are
-  // DfCache-OWNED (keyed by dir + hop), not bare persists: repeated
-  // invocations reuse one cached set instead of stranding a fresh
-  // persist per call, and session eviction frees them
-  // (PersistHygieneSpec pins the no-growth property).
-  def g6BfsKhop(spark: SparkSession, dir: String): DataFrame = {
-    val sym = withSym(spark, dir)
-    val src = graft.util.DfCache.cached(spark, dir, "g6_level_0") {
+  // One `bfsLevels` run with a constant tag: the region sources merge
+  // into one min-dist field.
+  def g6BfsKhop(spark: SparkSession, dir: String): DataFrame =
+    bfsLevels(spark, dir, "g6", 4) {
       graft.sources.Tables.load(spark, dir, "region")
-        .select((col("r_regionkey").cast("long") * 8 + 5).as("node"))
-    }
-    var levels = List(src.withColumn("dist", lit(0)))
-    var frontier = src
-    for (h <- 1 to 4) {
-      val prev = frontier
-      val seen = levels.map(_.select(col("node"))).reduce(_.union(_))
-      // localCheckpoint: constant-size per-hop plans (the g10/g27
-      // lesson — lineage otherwise nests every earlier level)
-      val nxt = graft.util.DfCache.cached(spark, dir, s"g6_level_$h") {
-        prev.join(sym, col("node") === col("src"))
-          .select(col("dst").as("node")).distinct()
-          .join(seen, Seq("node"), "left_anti")
-          .localCheckpoint()
-      }
-      frontier = nxt
-      levels = nxt.withColumn("dist", lit(h)) :: levels
-    }
-    levels.reduce(_.union(_))
-      .select(col("node").as("node_id"), col("dist")).orderBy(col("node_id"))
-  }
+        .select(lit(0L).as("tag"), (col("r_regionkey").cast("long") * 8 + 5).as("node"))
+    }.select(col("node").as("node_id"), col("dist")).orderBy(col("node_id"))
 
   lazy val g6Sql: String =
     s"""WITH RECURSIVE ${GraphTables.symSqlCtes},
@@ -3576,46 +3595,23 @@ object GraphOps {
   // Determinism: Σ 1/d over thousands of rows in shuffle order is
   // IEEE-order-dependent, so the sum runs in integer TWELFTHS
   // (12/d ∈ {12,6,4,3} for d ≤ 4 — lcm(1..4)=12): one exact BIGINT
-  // sum, one final division. Plan: the multi-source frontier is
-  // (source, node) rows joining the cached src-partitioned edge table
-  // once per hop (g6's loop with a source tag riding along) — k
-  // sources cost k× one BFS's frontier volume, never a k-fold edge
-  // replication; per-source dedup is the same anti-join as g6, and
-  // every level is DfCache-owned.
+  // sum, one final division. Plan: one `bfsLevels` run tagged by
+  // source.
   private val G18Depth = 4
 
-  def g18HarmonicCentrality(spark: SparkSession, dir: String): DataFrame = {
-    val sym = withSym(spark, dir)
-    val src = graft.util.DfCache.cached(spark, dir, "g18_level_0") {
+  def g18HarmonicCentrality(spark: SparkSession, dir: String): DataFrame =
+    bfsLevels(spark, dir, "g18", G18Depth) {
       graft.sources.Tables.load(spark, dir, "region")
-        .select((col("r_regionkey").cast("long") * 8 + 5).as("sid"))
-        .withColumn("node", col("sid"))
-    }
-    var levels = List(src.withColumn("dist", lit(0)))
-    var frontier = src
-    for (h <- 1 to G18Depth) {
-      val prev = frontier
-      val seen = levels.map(_.select(col("sid"), col("node"))).reduce(_.union(_))
-      // localCheckpoint: constant-size per-hop plans (the g27 lesson)
-      val nxt = graft.util.DfCache.cached(spark, dir, s"g18_level_$h") {
-        prev.join(sym, col("node") === col("src"))
-          .select(col("sid"), col("dst").as("node")).distinct()
-          .join(seen, Seq("sid", "node"), "left_anti")
-          .localCheckpoint()
-      }
-      frontier = nxt
-      levels = nxt.withColumn("dist", lit(h)) :: levels
-    }
-    levels.reduce(_.union(_))
-      .filter(col("dist") > 0)
-      .groupBy(col("sid"))
+        .select((col("r_regionkey").cast("long") * 8 + 5).as("tag"))
+        .withColumn("node", col("tag"))
+    }.filter(col("dist") > 0)
+      .groupBy(col("tag"))
       .agg(count(lit(1)).as("n_reached"),
         sum(expr("12 div dist")).as("harmonic_x12"))
-      .select(col("sid").as("source_id"), col("n_reached"),
+      .select(col("tag").as("source_id"), col("n_reached"),
         col("harmonic_x12"),
         (col("harmonic_x12").cast("double") / 12.0).as("harmonic"))
       .orderBy(col("source_id"))
-  }
 
   lazy val g18Sql: String =
     s"""WITH RECURSIVE ${GraphTables.symSqlCtes},
@@ -3909,60 +3905,19 @@ object GraphOps {
   // per (seed, dist) up to depth ReachDepth. The per-seed max dist is
   // an eccentricity lower bound; their max bounds the diameter from
   // below — the standard sampled probe, exact on the sampled seeds
-  // (iFUB's starting point). Same frontier discipline as g6: each
-  // level DfCache-owned, the seen-set a lazy union of cached levels,
-  // one join + distinct + anti-join per hop; state is ≤ K·V rows
-  // total (seed-bounded, the scale knob is K — seeds ride the
-  // frontier key so K× work, not K× rounds).
+  // (iFUB's starting point). Plan: one `bfsLevels` run tagged by
+  // seed; the scale knob is K.
   private val ReachDepth = 6
 
-  def g27ReachProfile(spark: SparkSession, dir: String): DataFrame = {
-    val sym = withSym(spark, dir)
-    // Two regimes (optimization r14, the kcorePeel gate): below
-    // `spark.graft.graph.broadcastCap` edge rows the per-hop frontier
-    // and seen-set sides are EXPLICITLY broadcast into the expansion /
-    // anti joins (the cached E-row table never enters an exchange) and
-    // the hops run AQE-quiet — the g6 recipe. Over the cap (a 100 TB
-    // graph's K·V-row frontier can't broadcast) the proven per-hop-AQE
-    // shuffle shape runs unchanged.
-    val small = graft.util.Loops.memoRows(sym) <=
-      longConf(spark, "spark.graft.graph.broadcastCap", 8000000L)
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val src = graft.util.DfCache.cached(spark, dir, "g27_level_0") {
+  def g27ReachProfile(spark: SparkSession, dir: String): DataFrame =
+    bfsLevels(spark, dir, "g27", ReachDepth) {
       graft.sources.Tables.load(spark, dir, "customer")
-        .select((col("c_custkey").cast("long") * 8).as("seed"))
-        .orderBy(col("seed")).limit(4)
-        .select(col("seed"), col("seed").as("node"))
-    }
-    def build(): DataFrame = {
-      var levels = List(src.withColumn("dist", lit(0)))
-      var frontier = src
-      for (h <- 1 to ReachDepth) {
-        val prev = frontier
-        val seen = levels.map(_.select(col("seed"), col("node"))).reduce(_.union(_))
-        // localCheckpoint truncates the level's lineage (the g10 lesson,
-        // re-learned here): without it each level's LOGICAL plan nests
-        // every earlier level's, Catalyst analysis grows ~2^h, and the
-        // driver — not the executors — burned ~40 s planning hop 6 at
-        // sf0.1. With the cut, per-hop plans stay constant-size.
-        val nxt = graft.util.DfCache.cached(spark, dir, s"g27_level_$h") {
-          bc(prev).join(sym, col("node") === col("src"))
-            .select(col("seed"), col("dst").as("node")).distinct()
-            .join(bc(seen), Seq("seed", "node"), "left_anti")
-            .localCheckpoint()
-        }
-        frontier = nxt
-        levels = nxt.withColumn("dist", lit(h)) :: levels
-      }
-      levels.reduce(_.union(_))
-        .groupBy(col("seed"), col("dist"))
-        .agg(count(lit(1)).as("n_nodes"))
-        .orderBy(col("seed"), col("dist"))
-    }
-    if (small)
-      graft.util.Loops.quiet(spark) { build() }
-    else build()
-  }
+        .select((col("c_custkey").cast("long") * 8).as("tag"))
+        .orderBy(col("tag")).limit(4)
+        .withColumn("node", col("tag"))
+    }.groupBy(col("tag").as("seed"), col("dist"))
+      .agg(count(lit(1)).as("n_nodes"))
+      .orderBy(col("seed"), col("dist"))
 
   lazy val g27Sql: String =
     s"""WITH RECURSIVE ${GraphTables.symSqlCtes},

@@ -1,6 +1,8 @@
 package graft.util
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped cache for shared derived tables (edge lists, shingle
@@ -43,10 +45,21 @@ object DfCache {
       val hit = cache.get(key)
       if (hit != null) hit
       else {
-        val df = build.persist(StorageLevel.MEMORY_AND_DISK)
+        val built = build
+        val df = if (checkpointRdd(built).isDefined) built
+          else built.persist(StorageLevel.MEMORY_AND_DISK)
         cache.put(key, df)
         df
       }
+    }
+
+  // A localCheckpoint'ed entry is a scan of an RDD that keeps its own
+  // blocks: persisting on top would store the rows twice, and
+  // unpersisting the DataFrame would leave the checkpoint's blocks.
+  private def checkpointRdd(df: DataFrame): Option[RDD[_]] =
+    df.queryExecution.logical match {
+      case r: LogicalRDD if r.rdd.getStorageLevel != StorageLevel.NONE => Some(r.rdd)
+      case _ => None
     }
 
   /** Drop (and best-effort unpersist) every entry of one session. */
@@ -55,7 +68,11 @@ object DfCache {
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey._1 eq spark) {
-        try e.getValue.unpersist(blocking = false) catch { case _: Throwable => () }
+        val df = e.getValue
+        try checkpointRdd(df) match {
+          case Some(rdd) => rdd.unpersist(blocking = false)
+          case None => df.unpersist(blocking = false)
+        } catch { case _: Throwable => () }
         it.remove()
       }
     }

@@ -16,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   *  - `spark.graft.graph.broadcastCap` (r14): kcorePeel's explicit
   *    alive-set broadcast + quiet lazy rounds vs the per-round-AQE
-  *    shuffle regime (g20/g35).
+  *    shuffle regime (g20/g35), and the BFS kernel's broadcast +
+  *    quiet hops vs per-hop-AQE shuffle hops (g6/g18/g27/g40).
   *  - `spark.graft.truss.memCkptCap` (r14): g33's in-memory lazy round
   *    checkpoints vs the sf10 parquet-per-round discipline.
   */
@@ -51,19 +52,31 @@ class Round14PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     bothPathsAgree("g35_coreness", Seq("spark.graft.graph.broadcastCap"))
   }
 
-  test("g27: broadcast-frontier quiet hops ≡ per-hop-AQE shuffle hops") {
-    // the DfCache'd levels would make the second run a cache hit —
-    // evict so the over-cap regime actually re-executes the hops
-    val fast = rowsOf(SparkEntry.queries("g27_reach_profile")(spark, dir))
+  // bfsLevels: broadcast frontier/seen sides + quiet hops vs the
+  // per-hop-AQE shuffle hops. The levels are DfCache'd, so a second run
+  // would be a cache hit — evict so each regime re-executes the hops.
+  private def bothRegimesAgree(name: String)(run: => DataFrame): Unit = {
+    val cap = "spark.graft.graph.broadcastCap"
     graft.util.DfCache.evict(spark)
-    spark.conf.set("spark.graft.graph.broadcastCap", "0")
-    try {
-      val over = rowsOf(SparkEntry.queries("g27_reach_profile")(spark, dir))
-      assert(fast === over, "g27 broadcast vs shuffle hops diverged")
-    } finally {
-      spark.conf.unset("spark.graft.graph.broadcastCap")
+    val fast = rowsOf(run)
+    graft.util.DfCache.evict(spark)
+    spark.conf.set(cap, "0")
+    try assert(rowsOf(run) === fast, s"$name broadcast vs shuffle hops diverged")
+    finally {
+      spark.conf.unset(cap)
       graft.util.DfCache.evict(spark)
     }
+  }
+
+  Seq("g6" -> "g6_bfs_khop", "g18" -> "g18_harmonic", "g27" -> "g27_reach_profile")
+    .foreach { case (tag, q) =>
+      test(s"$tag: broadcast-frontier quiet hops ≡ per-hop-AQE shuffle hops") {
+        bothRegimesAgree(tag)(SparkEntry.queries(q)(spark, dir))
+      }
+    }
+
+  test("g40 sweep: broadcast-frontier quiet hops ≡ per-hop-AQE shuffle hops") {
+    bothRegimesAgree("g40")(graft.operators.graph.GraphOps.g40Distributed(spark, dir))
   }
 
   test("g33: in-memory lazy round checkpoints ≡ parquet round discipline") {

@@ -49,6 +49,18 @@ class PersistHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.util.DfCache.evict(s2)
   }
 
+  test("evict releases every RDD g6 and g18 persisted, level checkpoints included") {
+    graft.util.DfCache.evict(spark)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Seq("g6_bfs_khop", "g18_harmonic").foreach(q =>
+      graft.SparkEntry.queries(q)(spark, dir).collect())
+    val created = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(created.nonEmpty, "expected cached levels")
+    graft.util.DfCache.evict(spark)
+    val live = spark.sparkContext.getPersistentRDDs.keySet & created
+    assert(live.isEmpty, s"RDDs ${live.toSeq.sorted} still persistent after evict")
+  }
+
   test("DfCache.evict releases blocks and queries rebuild correctly") {
     val before = graft.SparkEntry.queries("g7_triangles")(spark, dir).collect()
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty, "expected cached intermediates")
