@@ -1,7 +1,8 @@
 package graft.operators.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField}
 import org.apache.spark.storage.StorageLevel
 
 /** Graph analytics — the reference's own operator surface, Spark-first.
@@ -399,78 +400,91 @@ object GraphOps {
     * Maps tagged seeds `(tag, node)` to first-reach levels
     * `(tag, node, dist)` with `dist` ≤ `maxDepth`: every tag runs its
     * own BFS (one constant tag merges the sources into one min-dist
-    * field). Tags ride the frontier key, so K tags cost K× one BFS's
-    * frontier volume, never K× rounds or a K-fold edge replication;
-    * state is ≤ K·V rows. Per hop one frontier ⋈ sym expansion, one
-    * distinct, one per-tag anti-join against the seen set (a lazy
-    * union of the levels), so a settled node never re-expands and a
-    * hop costs O(E). The loop stops at the first empty level — every
-    * later level would be empty too.
+    * field). Every seed row comes out as a level-0 row exactly as
+    * given — duplicates, seeds absent from sym and null nodes included
+    * — and every deeper row is a node first reached at that hop. Tags
+    * are non-null. `dist` is data, never a plan literal: when only the
+    * seed level exists (an edgeless seed set), Catalyst would otherwise
+    * fold a caller's expression over it — g18's `12 div dist` failed
+    * planning with a divide by zero on an empty graph.
     *
-    * Levels are DfCache-owned under `key` (`<key>_level_<h>`), not bare
-    * persists: repeated calls reuse one set and session eviction frees
-    * them (PersistHygieneSpec). Each level, seeds included, is a lazy
-    * `localCheckpoint(false)` materialized by the hop's own `count()`,
-    * which runs after `DfCache.cached` returns — one job per hop, none
-    * under the cache lock. `dist` is data in the checkpoint, never a
-    * plan literal: when only the seed level exists (an edgeless seed
-    * set), Catalyst would otherwise fold a caller's expression over it
-    * — g18's `12 div dist` failed planning with a divide by zero on
-    * an empty graph. The checkpoint also truncates lineage: without
-    * it each level's logical plan nests every earlier one, Catalyst
-    * analysis grows ~2^h, and the driver burned ~40 s planning g27's
-    * hop 6 at sf0.1. The count is the driver stop-check and sizes the
-    * next hop's broadcasts (the g10/g12 one-scalar convergence
-    * precedent).
+    * Two regimes, decided by sym's row count against
+    * `spark.graft.graph.broadcastCap` (per-operand broadcast-or-
+    * partition, the SPARQL-on-Spark rule: under the cap the whole
+    * graph is the small side).
     *
-    * Two regimes (the kcorePeel gate; per-join broadcast-or-partition
-    * by operand size, the SPARQL-on-Spark rule). With sym at or under
-    * `spark.graft.graph.broadcastCap` edge rows, the hops run AQE-quiet
-    * and the frontier and seen sides are EXPLICITLY broadcast while
-    * their row counts (known from the hop counts; seen is bounded by
-    * K·V, not by E) stay under the same cap — the cached E-row table
-    * never enters an exchange and the plan is deterministic. Over the
-    * cap (a 100 TB graph, whose K·V frontier can't broadcast) the
-    * per-hop-AQE shuffle shape runs. Round-10 notes on g40's sweep (the
-    * paths not taken): a hop costs ~0.5 s at sf0.1 FLAT in frontier
-    * size — the full 12M-row sym scan behind the broadcast expansion
-    * join, not reducer scheduling — so a composed stride-2 lazy block
-    * (the minLabelFixpoint trick) measured 38 s vs ~11 s (AQE re-plans
-    * each reference to the intra-block level as its own exchange and
-    * re-ran the expansion 3×), and AQE partition coalescing measured
-    * 29–52 s (the fat middle hop collapsed to ~1 task). */
-  private def bfsLevels(spark: SparkSession, dir: String, key: String,
+    * At or under the cap, the CSR kernel. Sym is collected once per
+    * (session, dir) into a [[Csr]] and broadcast as `graph_sym_csr`,
+    * owned by DfCache: every BFS of the session reuses it and `evict`
+    * destroys it — the reference's relationship store that
+    * Preloader.java:16 warms once for all workers. The seeds are
+    * grouped by tag and every tag's BFS runs inside one
+    * `mapPartitions` against the broadcast, with two V-int arrays per
+    * BFS. The result is a lazy RDD-backed DataFrame, so the whole
+    * search runs inside the caller's action: one job, no checkpoints or
+    * stop-check counts, no AQE flip, and no per-hop scan of sym — a hop
+    * joined against the cached sym scans all of it, ~0.5 s per hop at
+    * sf0.1 flat in frontier size (measured on g40's sweep).
+    *
+    * Over the cap (a 100 TB graph, whose adjacency fits no executor),
+    * per-hop shuffle hops: one frontier ⋈ sym expansion, one distinct
+    * and one per-tag anti-join against the seen set (a lazy union of
+    * the levels), so a settled node never re-expands and a hop costs
+    * O(E); K tags cost K× one BFS's frontier volume, never K× rounds.
+    * The loop stops at the first empty level. Levels are DfCache-owned
+    * under `key` (`<key>_level_<h>`), so session eviction frees them.
+    * Each level, seeds included, is a lazy `localCheckpoint(false)`
+    * materialized by the hop's own `count()`, which runs after
+    * `DfCache.cached` returns — one job per hop, none under the cache
+    * lock. The checkpoint truncates lineage: without it each level's
+    * logical plan nests every earlier one, Catalyst analysis grows
+    * ~2^h, and the driver burned ~40 s planning g27's hop 6 at sf0.1.
+    * Round-10 notes on g40's sweep (the paths not taken): a composed
+    * stride-2 lazy block (the minLabelFixpoint trick) measured 38 s vs
+    * ~11 s (AQE re-plans each reference to the intra-block level as its
+    * own exchange and re-ran the expansion 3×), and AQE partition
+    * coalescing measured 29–52 s (the fat middle hop collapsed to ~1
+    * task). */
+  private[graft] def bfsLevels(spark: SparkSession, dir: String, key: String,
       maxDepth: Int)(seeds: => DataFrame): DataFrame = {
     val sym = withSym(spark, dir)
-    val cap = graphBroadcastCap(spark)
-    val small = graft.util.Loops.memoRows(sym) <= cap
-    def bc(df: DataFrame, rows: Long): DataFrame =
-      if (small && rows <= cap) broadcast(df) else df
-    def level(h: Int)(rows: => DataFrame): (DataFrame, Long) = {
-      val l = graft.util.DfCache.cached(spark, dir, s"${key}_level_$h") {
-        rows.select(col("tag"), col("node"), lit(h).as("dist")).localCheckpoint(false)
+    if (graft.util.Loops.memoRows(sym) <= graphBroadcastCap(spark)) {
+      val csr = graft.util.DfCache.broadcastOnce(spark, dir, "graph_sym_csr")(Csr.of(sym))
+      val s = seeds.select(col("tag"), col("node"))
+      val levels = s.rdd.map(r => (r.get(0), r.get(1)))
+        .groupByKey(new org.apache.spark.HashPartitioner(spark.sparkContext.defaultParallelism))
+        .mapPartitions(_.flatMap { case (tag, nodes) =>
+          val g = csr.value
+          val sources = nodes.iterator.collect { case u: java.lang.Long => g.indexOf(u) }
+            .filter(_ >= 0).toArray
+          val (dist, reached) = g.bfs(sources, maxDepth)
+          nodes.iterator.map(u => Row(tag, u, 0)) ++
+            reached.iterator.filter(dist(_) > 0).map(v => Row(tag, g.ids(v), dist(v)))
+        })
+      spark.createDataFrame(levels,
+        s.schema.add(StructField("dist", IntegerType, nullable = false)))
+    } else {
+      def level(h: Int)(rows: => DataFrame): (DataFrame, Long) = {
+        val l = graft.util.DfCache.cached(spark, dir, s"${key}_level_$h") {
+          rows.select(col("tag"), col("node"), lit(h).as("dist")).localCheckpoint(false)
+        }
+        (l, l.count())
       }
-      (l, l.count())
-    }
-    def hops(): DataFrame = {
       val (l0, n0) = level(0)(seeds)
       var levels = Vector(l0)
       var frontierRows = n0
-      var seenRows = n0
       while (levels.size <= maxDepth && frontierRows > 0L) {
         val seen = levels.reduce(_.union(_))
         val (nxt, rows) = level(levels.size) {
-          bc(levels.last, frontierRows).join(sym, col("node") === col("src"))
+          levels.last.join(sym, col("node") === col("src"))
             .select(col("tag"), col("dst").as("node")).distinct()
-            .join(bc(seen, seenRows), Seq("tag", "node"), "left_anti")
+            .join(seen, Seq("tag", "node"), "left_anti")
         }
         frontierRows = rows
-        seenRows += rows
         if (rows > 0L) levels :+= nxt
       }
       levels.reduce(_.union(_))
     }
-    if (small) graft.util.Loops.quiet(spark)(hops()) else hops()
   }
 
   // ---- g40: pseudo-diameter (double-sweep BFS lower bound) ----
@@ -501,42 +515,16 @@ object GraphOps {
   private def longConf(spark: SparkSession, key: String, dflt: Long): Long =
     spark.conf.getOption(key).map(_.toLong).getOrElse(dflt)
 
-  /** `spark.graft.graph.broadcastCap`: the row count at or under which
-    * the graph loops (kcorePeel, bfsLevels) take their broadcast regime.
-    * 8M rows of two longs ≈ a ≤128 MB broadcast side. */
+  /** `spark.graft.graph.broadcastCap`: the sym row count at or under
+    * which the graph loops take their broadcast regime — kcorePeel's
+    * broadcast alive set (≤ V ≤ E rows of two longs, ≤128 MB at the
+    * 8M default) and bfsLevels' CSR kernel. The CSR fits the same
+    * budget: 4 bytes per edge row (32 MB of targets at 8M rows) plus
+    * 12 bytes per node (an 8-byte id and a 4-byte offset), and V ≤ E
+    * on sym, so at most 128 MB broadcast, and each executor holds one
+    * copy. */
   private def graphBroadcastCap(spark: SparkSession): Long =
     longConf(spark, "spark.graft.graph.broadcastCap", 8000000L)
-
-  /** Level-synchronous BFS over a CSR core: distances from seedIdx,
-    * capped at maxHops; returns (dist array, ecc, reached count). */
-  private def driverBfsLevels(off: Array[Int], tgt: Array[Int],
-      n: Int, seedIdx: Int, maxHops: Int): (Array[Int], Int, Long) = {
-    val dist = Array.fill(n)(-1)
-    var frontier = new Array[Int](1)
-    frontier(0) = seedIdx
-    dist(seedIdx) = 0
-    var reached = 1L
-    var ecc = 0
-    var h = 1
-    while (h <= maxHops && frontier.nonEmpty) {
-      val next = new scala.collection.mutable.ArrayBuffer[Int]()
-      var i = 0
-      while (i < frontier.length) {
-        val v = frontier(i)
-        var p = off(v)
-        while (p < off(v + 1)) {
-          val w = tgt(p)
-          if (dist(w) == -1) { dist(w) = h; next += w }
-          p += 1
-        }
-        i += 1
-      }
-      if (next.nonEmpty) { ecc = h; reached += next.length }
-      frontier = next.toArray
-      h += 1
-    }
-    (dist, ecc, reached)
-  }
 
   def g40PseudoDiameter(spark: SparkSession, dir: String): DataFrame = {
     val sym = withSym(spark, dir)
@@ -558,11 +546,9 @@ object GraphOps {
     val cc = ccLabels(spark, dir)
     val seedComp = cc.filter(col("node_id") === seedId)
       .select(col("component")).collect()(0).getLong(0)
-    // coalesce before the checkpoint: toLocalIterator schedules ONE
-    // job per partition, so 32 near-empty partitions cost ~30 driver
-    // round trips per collect; a handful of fat partitions keep the
-    // per-partition memory bound (the reason for toLocalIterator)
-    // while making the drain a few jobs
+    // coalesce before the checkpoint: the component counts and the
+    // CSR collect below then schedule a handful of fat tasks instead of
+    // 32 near-empty ones
     val comp = cc.filter(col("component") === seedComp)
       .select(col("node_id")).coalesce(4).localCheckpoint(true)
     val nComp = comp.count()
@@ -581,54 +567,24 @@ object GraphOps {
       .select(col("src"), col("dst")).coalesce(8).localCheckpoint(true)
     val eCnt = compEdges.count()
     if (eCnt <= diamEdgeCap) {
-      val nodes = new Array[Long](nComp.toInt)
-      var k = 0
-      val nIt = comp.toLocalIterator()
-      while (nIt.hasNext) { nodes(k) = nIt.next().getLong(0); k += 1 }
-      require(k == nComp, s"component node recount drifted: $k vs $nComp")
-      java.util.Arrays.sort(nodes)
-      def idxOf(u: Long): Int = {
-        val j = java.util.Arrays.binarySearch(nodes, u)
-        require(j >= 0, s"edge endpoint $u outside the seed component — " +
-          "cc_converged labels must close the component")
-        j
-      }
-      val n = nodes.length
-      val m = eCnt.toInt
-      val srcs = new Array[Int](m)
-      val dsts = new Array[Int](m)
-      k = 0
-      val eIt = compEdges.toLocalIterator()
-      while (eIt.hasNext) {
-        val r = eIt.next()
-        srcs(k) = idxOf(r.getLong(0)); dsts(k) = idxOf(r.getLong(1))
-        k += 1
-      }
-      require(k == m, s"component edge recount drifted: $k vs $m")
-      // CSR (sym already holds both directions of every edge)
-      val outDeg = new Array[Int](n)
-      var i = 0
-      while (i < m) { outDeg(srcs(i)) += 1; i += 1 }
-      val off = new Array[Int](n + 1)
-      i = 0
-      while (i < n) { off(i + 1) = off(i) + outDeg(i); i += 1 }
-      val fill = off.clone()
-      val tgt = new Array[Int](m)
-      i = 0
-      while (i < m) { val s = srcs(i); tgt(fill(s)) = dsts(i); fill(s) += 1; i += 1 }
-      val (d1, ecc1, n1) = driverBfsLevels(off, tgt, n, idxOf(seedId), 8)
-      // far = (max dist, then min node id); nodes[] is sorted, so the
+      // the BFS kernel's CSR and search, on the driver
+      val csr = Csr.of(compEdges)
+      require(csr.n == nComp, s"component edges span ${csr.n} nodes, not $nComp — " +
+        "cc_converged labels must close the component")
+      val (d1, r1) = csr.bfs(Array(csr.indexOf(seedId)), 8)
+      // far = (max dist, then min node id); ids are sorted, so the
       // first index at the max distance is the min id
       var farIdx = -1
       var maxD = -1
-      i = 0
-      while (i < n) {
+      var i = 0
+      while (i < csr.n) {
         if (d1(i) > maxD) { maxD = d1(i); farIdx = i }
         i += 1
       }
-      val (_, ecc2, n2) = driverBfsLevels(off, tgt, n, farIdx, 8)
+      val (d2, r2) = csr.bfs(Array(farIdx), 8)
       import spark.implicits._
-      Seq((seedId, ecc1.toLong, n1, nodes(farIdx), ecc2.toLong, n2))
+      Seq((seedId, d1(r1.last).toLong, r1.length.toLong, csr.ids(farIdx),
+          d2(r2.last).toLong, r2.length.toLong))
         .toDF("seed_node", "ecc_seed", "n_reached_seed",
           "far_node", "ecc_far", "n_reached_far")
     } else {

@@ -1,5 +1,8 @@
 package graft.util
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -19,28 +22,36 @@ import org.apache.spark.storage.StorageLevel
   */
 object DfCache {
   private val cache = new java.util.HashMap[(SparkSession, String, String), DataFrame]()
+  private val broadcasts = new java.util.HashMap[(SparkSession, String, String), Broadcast[_]]()
   private val hooked = new java.util.HashSet[SparkSession]()
+
+  // Eviction hook: frees this session's entries when the underlying
+  // context stops. NOTE the listener fires on APPLICATION end, not on
+  // an individual session close — a long-lived server multiplexing
+  // many short-lived sessions over one context must call
+  // [[evict]](session) from its own session-close path; the hook alone
+  // only guarantees cleanup at context shutdown. Callers hold the lock.
+  private def hook(spark: SparkSession): Unit =
+    if (hooked.add(spark)) {
+      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+          evict(spark)
+      })
+    }
 
   // Coarse reentrant lock, NOT ConcurrentHashMap.computeIfAbsent:
   // builds nest (pagerank's build caches the edge+degree table on the
   // same map) and computeIfAbsent throws "Recursive update" when the
-  // nested insert lands in the same bin. Builds are cheap (plan
-  // construction + persist marking — no job runs), so one lock is fine.
+  // nested insert lands in the same bin. Most builds only construct a
+  // plan and mark it persisted, but a loop-derived entry (pagerank
+  // ranks, cc_converged, lpa_labels) runs its rounds' jobs inside
+  // `build`, and every other session's cache call waits behind them.
+  // Work that only produces a value therefore runs outside the lock:
+  // the BFS level counts and the [[broadcastOnce]] builds.
   def cached(spark: SparkSession, dir: String, name: String)(build: => DataFrame): DataFrame =
     synchronized {
-      // Eviction hook: frees this map when the underlying context
-      // stops. NOTE the listener fires on APPLICATION end, not on an
-      // individual session close — a long-lived server multiplexing
-      // many short-lived sessions over one context must call
-      // [[evict]](session) from its own session-close path; the hook
-      // alone only guarantees cleanup at context shutdown.
-      if (hooked.add(spark)) {
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-            evict(spark)
-        })
-      }
+      hook(spark)
       val key = (spark, dir, name)
       val hit = cache.get(key)
       if (hit != null) hit
@@ -53,6 +64,23 @@ object DfCache {
       }
     }
 
+  /** A driver-built value broadcast once per (session, dir, name) and
+    * destroyed by [[evict]]. `build` runs outside the lock (it may run
+    * jobs); when two threads race, the first insert wins and the loser
+    * destroys its own copy. */
+  def broadcastOnce[T: ClassTag](spark: SparkSession, dir: String, name: String)(
+      build: => T): Broadcast[T] = {
+    val key = (spark, dir, name)
+    val hit = synchronized { hook(spark); broadcasts.get(key) }
+    if (hit != null) hit.asInstanceOf[Broadcast[T]]
+    else {
+      val b = spark.sparkContext.broadcast(build)
+      val won = synchronized(broadcasts.putIfAbsent(key, b))
+      if (won == null) b
+      else { b.destroy(); won.asInstanceOf[Broadcast[T]] }
+    }
+  }
+
   // A localCheckpoint'ed entry is a scan of an RDD that keeps its own
   // blocks: persisting on top would store the rows twice, and
   // unpersisting the DataFrame would leave the checkpoint's blocks.
@@ -62,7 +90,8 @@ object DfCache {
       case _ => None
     }
 
-  /** Drop (and best-effort unpersist) every entry of one session. */
+  /** Drop (and best-effort unpersist or destroy) every entry of one
+    * session. */
   def evict(spark: SparkSession): Unit = synchronized {
     val it = cache.entrySet().iterator()
     while (it.hasNext) {
@@ -74,6 +103,14 @@ object DfCache {
           case None => df.unpersist(blocking = false)
         } catch { case _: Throwable => () }
         it.remove()
+      }
+    }
+    val bit = broadcasts.entrySet().iterator()
+    while (bit.hasNext) {
+      val e = bit.next()
+      if (e.getKey._1 eq spark) {
+        try e.getValue.destroy() catch { case _: Throwable => () }
+        bit.remove()
       }
     }
     hooked.remove(spark)

@@ -3,7 +3,7 @@ package graft.util
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-loop execution scope for the iterative operators (pagerank /
-  * label fixpoints / peels / BFS levels).
+  * label fixpoints / peels).
   *
   * Inside a convergence loop every round is a tiny, FIXED-shape query:
   * the joins are co-partitioned by construction (cached edge layout ⋈

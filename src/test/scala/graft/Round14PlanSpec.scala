@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.graph.GraphOps
 
 /** Round-14 optimization pins: the broadcast/in-memory fast regimes
   * added this round are size-gated behind confs, and at gate scale the
@@ -16,8 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   *  - `spark.graft.graph.broadcastCap` (r14): kcorePeel's explicit
   *    alive-set broadcast + quiet lazy rounds vs the per-round-AQE
-  *    shuffle regime (g20/g35), and the BFS kernel's broadcast +
-  *    quiet hops vs per-hop-AQE shuffle hops (g6/g18/g27/g40).
+  *    shuffle regime (g20/g35), and the BFS kernel's broadcast CSR vs
+  *    its per-hop shuffle hops (g6/g18/g27/g40 and hand-fed seeds).
   *  - `spark.graft.truss.memCkptCap` (r14): g33's in-memory lazy round
   *    checkpoints vs the sf10 parquet-per-round discipline.
   */
@@ -52,31 +54,49 @@ class Round14PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     bothPathsAgree("g35_coreness", Seq("spark.graft.graph.broadcastCap"))
   }
 
-  // bfsLevels: broadcast frontier/seen sides + quiet hops vs the
-  // per-hop-AQE shuffle hops. The levels are DfCache'd, so a second run
-  // would be a cache hit — evict so each regime re-executes the hops.
-  private def bothRegimesAgree(name: String)(run: => DataFrame): Unit = {
+  // bfsLevels: the broadcast-CSR kernel vs the per-hop shuffle hops.
+  // The shuffle levels are DfCache'd and the CSR is a DfCache-owned
+  // broadcast, so evict around each run: each regime rebuilds its state.
+  private def bothRegimesAgree(name: String)(run: => DataFrame): Seq[Seq[Any]] = {
     val cap = "spark.graft.graph.broadcastCap"
     graft.util.DfCache.evict(spark)
-    val fast = rowsOf(run)
+    val kernel = rowsOf(run)
     graft.util.DfCache.evict(spark)
     spark.conf.set(cap, "0")
-    try assert(rowsOf(run) === fast, s"$name broadcast vs shuffle hops diverged")
+    try assert(rowsOf(run) === kernel, s"$name CSR kernel vs shuffle hops diverged")
     finally {
       spark.conf.unset(cap)
       graft.util.DfCache.evict(spark)
     }
+    kernel
   }
 
   Seq("g6" -> "g6_bfs_khop", "g18" -> "g18_harmonic", "g27" -> "g27_reach_profile")
     .foreach { case (tag, q) =>
-      test(s"$tag: broadcast-frontier quiet hops ≡ per-hop-AQE shuffle hops") {
+      test(s"$tag: CSR kernel ≡ per-hop shuffle hops") {
         bothRegimesAgree(tag)(SparkEntry.queries(q)(spark, dir))
       }
     }
 
-  test("g40 sweep: broadcast-frontier quiet hops ≡ per-hop-AQE shuffle hops") {
-    bothRegimesAgree("g40")(graft.operators.graph.GraphOps.g40Distributed(spark, dir))
+  test("g40 sweep: CSR kernel ≡ per-hop shuffle hops") {
+    bothRegimesAgree("g40")(GraphOps.g40Distributed(spark, dir))
+  }
+
+  test("bfsLevels hand-fed seeds: CSR kernel ≡ per-hop shuffle hops") {
+    // two tags; tag 1 repeats region node 5 and seeds 7, which no sym
+    // edge touches (type tag 7 does not exist); tag 2 seeds a null node
+    val seeds = Seq((1L, Some(5L)), (1L, Some(5L)), (1L, Some(7L)), (2L, None), (2L, Some(13L)))
+    import spark.implicits._
+    val rows = bothRegimesAgree("hand-fed") {
+      GraphOps.bfsLevels(spark, dir, "hand_fed", 3)(seeds.toDF("tag", "node"))
+        .orderBy(col("tag"), col("node"), col("dist"))
+    }
+    val level0 = rows.filter(_(2) == 0).map(r => (r(0), Option(r(1))))
+    assert(level0.sortBy(_.toString) === seeds.sortBy(_.toString),
+      "every seed row must come out as a level-0 row exactly as given")
+    assert(rows.count(r => r(0) == 1L && r(2) == 1) > 0, "tag 1 reached no neighbour")
+    assert(!rows.exists(r => r(1) == null && r(2) != 0), "a null node was expanded")
+    assert(rows.map(_(2).asInstanceOf[Int]).max == 3, "depth 3 not reached")
   }
 
   test("g33: in-memory lazy round checkpoints ≡ parquet round discipline") {

@@ -50,15 +50,37 @@ class PersistHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("evict releases every RDD g6 and g18 persisted, level checkpoints included") {
+    // cap 0: the per-hop shuffle regime, whose levels are checkpoints
+    val cap = "spark.graft.graph.broadcastCap"
     graft.util.DfCache.evict(spark)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    Seq("g6_bfs_khop", "g18_harmonic").foreach(q =>
-      graft.SparkEntry.queries(q)(spark, dir).collect())
-    val created = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(created.nonEmpty, "expected cached levels")
+    spark.conf.set(cap, "0")
+    try {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      Seq("g6_bfs_khop", "g18_harmonic").foreach(q =>
+        graft.SparkEntry.queries(q)(spark, dir).collect())
+      val created = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(created.size > 1, "expected cached sym and level checkpoints")
+      graft.util.DfCache.evict(spark)
+      val live = spark.sparkContext.getPersistentRDDs.keySet & created
+      assert(live.isEmpty, s"RDDs ${live.toSeq.sorted} still persistent after evict")
+    } finally spark.conf.unset(cap)
+  }
+
+  test("repeated g6/g18 runs share one CSR broadcast, and evict destroys it") {
+    import graft.operators.graph.Csr
     graft.util.DfCache.evict(spark)
-    val live = spark.sparkContext.getPersistentRDDs.keySet & created
-    assert(live.isEmpty, s"RDDs ${live.toSeq.sorted} still persistent after evict")
+    def run(): Seq[Seq[org.apache.spark.sql.Row]] = Seq("g6_bfs_khop", "g18_harmonic")
+      .map(q => graft.SparkEntry.queries(q)(spark, dir).collect().toSeq)
+    def current() = graft.util.DfCache.broadcastOnce[Csr](spark, dir, "graph_sym_csr")(
+      fail("no CSR broadcast is cached for the session"))
+    val first = run()
+    val b = current()
+    assert(run() === first)
+    assert(current() eq b, "the second g6/g18 run built a new CSR broadcast")
+    graft.util.DfCache.evict(spark)
+    intercept[org.apache.spark.SparkException](b.value)
+    assert(run() === first, "evict-then-rebuild must reproduce the results")
+    assert(!(current() eq b), "the rebuild reused the destroyed broadcast")
   }
 
   test("DfCache.evict releases blocks and queries rebuild correctly") {
