@@ -196,7 +196,9 @@ object Bench {
     * the bench times against. */
   val warmups: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
       // first Spark job of the session: absorbs JVM/parquet/codegen
-      // init so the cache-build entries below measure their own work
+      // init so the cache-build entries below measure their own work;
+      // it also primes `Tables`' schema memo for nation, and the builds
+      // below prime it for the tables they read
       "io_init" -> ((s, d) => graft.sources.Tables.load(s, d, "nation")),
       "graph_sym" -> ((s, d) => graft.operators.graph.GraphTables.sym(s, d)),
       "graph_edges_deg" -> ((s, d) => graft.operators.graph.GraphOps.edgesWithDeg(s, d)),

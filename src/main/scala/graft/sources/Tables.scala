@@ -1,12 +1,35 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the engine's table layout: one parquet per table under a
   * scale-factor directory. Scans stay declarative so Catalyst pushes
   * filters/projections into the parquet reader (verified in
   * `PlanSpec`): at 100 TB the scan is the dominant cost and pruning is
   * the first lever.
+  *
+  * Schema memo: a schema-less `spark.read.parquet` infers the schema
+  * with a one-task footer job on every call, and every query build
+  * loads its tables afresh. So `load` resolves each table version's
+  * schema once per JVM and reads through `spark.read.schema(s)`, which
+  * runs no job. The key is the qualified path, the (path, length,
+  * mtime) of every leaf file under it (the file itself for a
+  * single-file table), and the session's explicitly set
+  * `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` settings
+  * (binaryAsString, nanosAsLong, ...): a rewritten table gets a new key,
+  * and a session whose parquet settings differ gets its own schema. A
+  * rewrite that keeps every file's length and millisecond mtime is not
+  * seen; `load`'s inputs are immutable scale-factor tables, which is
+  * why only `Tables` reads through the memo — `TableIO` rewrites its
+  * paths in place (`compactParquet`, `upsertCompact`), and the
+  * streaming and checkpoint re-reads keep plain reads. The lookup, the
+  * inference on a miss and the `putIfAbsent` run without a lock:
+  * threads racing on a cold key may both infer, which is harmless.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -15,25 +38,62 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
-      // events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized
-      // reader rejects; read the raw int64 nanos and convert (the data
-      // carries no sub-microsecond precision, so this is lossless and
-      // matches DuckDB's microsecond timestamps exactly). Schema-matched
-      // rather than assumed: whether the legacy conf applies at schema
-      // inference depends on the launch path (sbt-forked JVMs see int64,
-      // a bare `java` launch resolves TIMESTAMP_NTZ), and both convert
-      // to the same session-TZ-free microsecond timestamps.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts",
-            org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-        case _ =>
-          raw.withColumn("ts",
-            org.apache.spark.sql.functions.col("ts").cast("timestamp"))
+      microsTs(parquet(spark, s"$dir/$name.parquet"))
+    } else parquet(spark, s"$dir/$name.parquet")
+
+  /** events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized
+    * reader rejects; read under `nanosAsLong` as raw int64 nanos and
+    * convert (the data carries no sub-microsecond precision, so this is
+    * lossless and matches DuckDB's microsecond timestamps exactly).
+    * Schema-matched rather than assumed: whether the legacy conf applies
+    * at schema inference depends on the launch path (sbt-forked JVMs
+    * see int64, a bare `java` launch resolves TIMESTAMP_NTZ), and both
+    * convert to the same session-TZ-free microsecond timestamps. */
+  private[sources] def microsTs(raw: DataFrame): DataFrame =
+    raw.schema("ts").dataType match {
+      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      case _ => raw.withColumn("ts", col("ts").cast("timestamp"))
+    }
+
+  private final case class SchemaKey(
+      root: String, leaves: Seq[(String, Long, Long)], conf: Seq[(String, String)])
+
+  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** `spark.read.parquet(path)`, with the schema inferred only on the
+    * first read of this table version under these parquet settings. */
+  private def parquet(spark: SparkSession, path: String): DataFrame =
+    schemaKey(spark, path) match {
+      case Some(key) =>
+        val known = schemas.get(key)
+        if (known != null) spark.read.schema(known).parquet(path)
+        else {
+          val df = spark.read.parquet(path)
+          schemas.putIfAbsent(key, df.schema)
+          df
+        }
+      case None => spark.read.parquet(path) // missing: Spark's own error
+    }
+
+  private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val root = fs.makeQualified(p)
+    if (!fs.exists(root)) None
+    else {
+      val leaves = Seq.newBuilder[(String, Long, Long)]
+      val it = fs.listFiles(root, true)
+      while (it.hasNext) {
+        val f = it.next()
+        leaves += ((f.getPath.toString, f.getLen, f.getModificationTime))
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+      val conf = spark.conf.getAll.toSeq.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      }.sorted
+      Some(SchemaKey(root.toString, leaves.result().sorted, conf))
+    }
+  }
 
   /** Register every table as a temp view (for the SQL-facing API). */
   def registerAll(spark: SparkSession, dir: String): Unit =

@@ -14,15 +14,12 @@ import org.apache.spark.sql.SparkSession
   */
 object Views {
 
-  val tableNames: Seq[String] = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Register the raw tables under `graft_<name>` plus the shared
     * derived tables under `graft_graph_edges`, `graft_shingles`,
     * `graft_emb_features`, `graft_emb_bands`. */
   def register(spark: SparkSession, dir: String): Unit = {
     graft.functions.GraftFunctions.registerAll(spark)
-    tableNames.foreach { t =>
+    Tables.all.foreach { t =>
       Tables.load(spark, dir, t).createOrReplaceTempView(s"graft_$t")
     }
     graft.operators.graph.GraphTables.sym(spark, dir)
