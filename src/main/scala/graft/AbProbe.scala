@@ -10,16 +10,18 @@ package graft
   * Prints one JSON line of per-regime rep seconds; read the mins.
   *
   * Usage:
-  *   GRAFT_AB_CONF="spark.graft.graph.broadcastCap=0" \
+  *   GRAFT_AB_CONF=spark.graft.graph.broadcastCap=0 \
   *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.AbProbe g20_kcore g35_coreness"
   */
 object AbProbe {
   /** `key=value[,key=value...]`; a comma splits only where the next
-    * `key=` starts, so a value may itself contain commas. */
+    * `key=` starts, so a value may itself contain commas. A
+    * `spark.graft.*` key must be one of [[graft.util.Regimes]]'s. */
   def parseConfs(spec: String): Seq[(String, String)] =
-    spec.split(",(?=[^,=]+=)").toSeq.filter(_.contains('=')).map { kv =>
-      val Array(k, v) = kv.split("=", 2); (k.trim, v.trim)
-    }
+    graft.util.Regimes.checked(
+      spec.split(",(?=[^,=]+=)").toSeq.filter(_.contains('=')).map { kv =>
+        val Array(k, v) = kv.split("=", 2); (k.trim, v.trim)
+      })
 
   /** Run `body` with `confs` set, then put back each key's exact prior
     * value — unset only a key that was absent — so a later A rep sees

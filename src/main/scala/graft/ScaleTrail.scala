@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.graph.GraphOps
+import graft.util.Regimes
 
 /** Scale-trail pin for the tolerance-loop operators (g12/g14) at
   * scales where their unrolled 24-round MATERIALIZED DuckDB oracles
@@ -25,12 +26,11 @@ object ScaleTrail {
     // form key=value become session confs (path forcing — e.g.
     // spark.graft.scc.trimAdjProbeCap=0 runs the pre-probe trim)
     val (confArgs, names) = args.drop(1).partition(_.contains("="))
+    val confs = Regimes.checked(confArgs.toSeq.map(_.split("=", 2)).map(a => (a(0), a(1))))
     val only = names.toSet
     def want(n: String): Boolean = only.isEmpty || only.contains(n)
     val spark = GraftSession.local(cpus, cpus)
-    confArgs.foreach { a =>
-      val Array(k, v) = a.split("=", 2); spark.conf.set(k, v)
-    }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     // host-health stamp per row (r12 verdict #2): canary_ratio vs the
     // committed bench baseline + this row's CPU-steal window, so sf1+
     // trail numbers are host-attributable across rounds
@@ -235,24 +235,21 @@ object ScaleTrail {
     // the converged tail, once all-full (cap 0) and once with the
     // shipped cap — trajectories must match exactly (the correctness
     // half), and the wall-clock + engaged-round counts decide whether
-    // the path stays or gets demoted to debug-only.
+    // the path stays or gets demoted to debug-only. Each run restores
+    // the session's own deltaWaveCap (a key=value arg included).
     if (want("g33_delta_tail")) {
-      val shippedCap = 1024L
-      def run(cap: Long): (Seq[(Int, Long)], Double) = {
-        spark.conf.set("spark.graft.truss.rounds", "12")
-        spark.conf.set("spark.graft.truss.deltaWaveCap", cap.toString)
-        val t0 = System.nanoTime()
-        val rows = GraphOps.g33Ktruss(spark, dir).collect()
-          .map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
-        val sec = (System.nanoTime() - t0) / 1e9
-        (rows, sec)
-      }
+      val shippedCap = Regimes.TrussDeltaWaveCap.default
+      def run(cap: Long): (Seq[(Int, Long)], Double) =
+        AbProbe.withConfs(spark, Seq(Regimes.TrussDeltaWaveCap.key -> cap.toString)) {
+          val t0 = System.nanoTime()
+          val rows = GraphOps.g33Ktruss(spark, dir, maxRounds = 12).collect()
+            .map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
+          (rows, (System.nanoTime() - t0) / 1e9)
+        }
       // shared round-0 layout built once so neither variant pays it
       GraphOps.g7OrientedEdges(spark, dir).count()
       val (fullTraj, fullSec) = run(0L) // cap 0 ⇒ every wave > cap ⇒ all-full
       val (deltaTraj, deltaSec) = run(shippedCap)
-      spark.conf.unset("spark.graft.truss.rounds")
-      spark.conf.unset("spark.graft.truss.deltaWaveCap")
       val mism = fullTraj.zipAll(deltaTraj, (-1, -1L), (-2, -2L))
         .count { case (a, b) => a != b }
       // round r+1 executes iff wave_r > 0 (the loop stops at fixpoint)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField}
 import org.apache.spark.storage.StorageLevel
+import graft.util.Regimes
 
 /** Graph analytics — the reference's own operator surface, Spark-first.
   *
@@ -82,7 +83,7 @@ object GraphOps {
   // thresholded at k, exactly d6/dg>=3 on the oracle side.
   //
   // Two regimes (optimization r14, r13 verdict #5 — guide §2.4 remove
-  // shuffles outright). Under `spark.graft.graph.broadcastCap` edge
+  // shuffles outright). Under `Regimes.GraphBroadcastCap` edge
   // rows (default 8M ⇒ alive ≤ V ≤ E ≤ 8M rows ≈ ≤128 MB broadcast),
   // BOTH membership joins take the alive set as an EXPLICIT broadcast:
   // the cached E-row table never enters an exchange (the old AQE
@@ -101,7 +102,7 @@ object GraphOps {
     // law ScaleTrail re-executes at sf10 where the unrolled oracle
     // can't follow (the pagerankFrom resume analog).
     val spark = sym.sparkSession
-    val smallGraph = graft.util.Loops.memoRows(sym) <= graphBroadcastCap(spark)
+    val smallGraph = graft.util.Loops.memoRows(sym) <= Regimes.GraphBroadcastCap(spark)
     if (smallGraph) graft.util.Loops.quiet(spark) {
       var alive = start.getOrElse(sym.select(col("src").as("n")).distinct())
       var deg = spark.emptyDataFrame
@@ -409,7 +410,7 @@ object GraphOps {
     * planning with a divide by zero on an empty graph.
     *
     * Two regimes, decided by sym's row count against
-    * `spark.graft.graph.broadcastCap` (per-operand broadcast-or-
+    * `Regimes.GraphBroadcastCap` (per-operand broadcast-or-
     * partition, the SPARQL-on-Spark rule: under the cap the whole
     * graph is the small side).
     *
@@ -448,7 +449,7 @@ object GraphOps {
   private[graft] def bfsLevels(spark: SparkSession, dir: String, key: String,
       maxDepth: Int)(seeds: => DataFrame): DataFrame = {
     val sym = withSym(spark, dir)
-    if (graft.util.Loops.memoRows(sym) <= graphBroadcastCap(spark)) {
+    if (graft.util.Loops.memoRows(sym) <= Regimes.GraphBroadcastCap(spark)) {
       val csr = graft.util.DfCache.broadcastOnce(spark, dir, "graph_sym_csr")(Csr.of(sym))
       val s = seeds.select(col("tag"), col("node"))
       val levels = s.rdd.map(r => (r.get(0), r.get(1)))
@@ -499,33 +500,6 @@ object GraphOps {
   // this distributed double sweep is g40's OVER-CAP path, the gated
   // scales take the bounded-component driver fast path below.
 
-  // Seed-component driver caps (the g45/g46 bounded-hybrid precedent:
-  // component-sized collect behind explicit caps, never corpus rows,
-  // the distributed double sweep as the over-cap path). At-cap heap
-  // is the primitive arrays (~0.4 GB) — the tarjanSccMinLabels
-  // sizing note.
-  private val DiamDriverNodeCapDefault = 4000000L
-  private val DiamDriverEdgeCapDefault = 16000000L
-
-  /** Hybrid driver-path caps are conf-overridable (`spark.graft.*`)
-    * so (a) a cluster operator can size them to the real driver heap
-    * and (b) specs can force the over-cap DISTRIBUTED branch — the
-    * only branch that exists at 100 TB — at gate scale and hash-gate
-    * both paths (Round11PlanSpec). */
-  private def longConf(spark: SparkSession, key: String, dflt: Long): Long =
-    spark.conf.getOption(key).map(_.toLong).getOrElse(dflt)
-
-  /** `spark.graft.graph.broadcastCap`: the sym row count at or under
-    * which the graph loops take their broadcast regime — kcorePeel's
-    * broadcast alive set (≤ V ≤ E rows of two longs, ≤128 MB at the
-    * 8M default) and bfsLevels' CSR kernel. The CSR fits the same
-    * budget: 4 bytes per edge row (32 MB of targets at 8M rows) plus
-    * 12 bytes per node (an 8-byte id and a 4-byte offset), and V ≤ E
-    * on sym, so at most 128 MB broadcast, and each executor holds one
-    * copy. */
-  private def graphBroadcastCap(spark: SparkSession): Long =
-    longConf(spark, "spark.graft.graph.broadcastCap", 8000000L)
-
   def g40PseudoDiameter(spark: SparkSession, dir: String): DataFrame = {
     val sym = withSym(spark, dir)
     // Bounded-component fast path: both sweeps only ever touch the
@@ -557,16 +531,12 @@ object GraphOps {
     // case), semi-joining + coalesce(8) + checkpointing the full edge
     // set only to discard it would spill/OOM on exactly the inputs
     // the cap exists to protect against.
-    val diamNodeCap = longConf(spark, "spark.graft.diam.driverNodeCap",
-      DiamDriverNodeCapDefault)
-    val diamEdgeCap = longConf(spark, "spark.graft.diam.driverEdgeCap",
-      DiamDriverEdgeCapDefault)
-    if (nComp > diamNodeCap) return g40Distributed(spark, dir)
+    if (nComp > Regimes.DriverNodeCap(spark)) return g40Distributed(spark, dir)
     val compEdges = sym
       .join(comp.select(col("node_id").as("src")), Seq("src"), "left_semi")
       .select(col("src"), col("dst")).coalesce(8).localCheckpoint(true)
     val eCnt = compEdges.count()
-    if (eCnt <= diamEdgeCap) {
+    if (eCnt <= Regimes.DriverEdgeCap(spark)) {
       // the BFS kernel's CSR and search, on the driver
       val csr = Csr.of(compEdges)
       require(csr.n == nComp, s"component edges span ${csr.n} nodes, not $nComp — " +
@@ -1669,14 +1639,14 @@ object GraphOps {
 
   // ---- g9: rank-vector checkpoint round-trip (ArrayStore port) ----
   /** Checkpoint root, in precedence order: the session conf
-    * `spark.graft.checkpointDir` (set per-job, e.g. `--conf`), the
+    * `Regimes.CheckpointDir` (set per-job, e.g. `--conf`), the
     * env `SPARK_GRAFT_CKPT_DIR`, then driver-local java.io.tmpdir.
     * On a cluster the root MUST be a shared filesystem path visible
     * to every executor — the tmpdir default is only correct in local
     * mode (the ArrayStore analog lives on the shared FS,
     * ArrayStore.java:27). */
   def checkpointRoot(spark: SparkSession): String =
-    spark.conf.getOption("spark.graft.checkpointDir")
+    spark.conf.getOption(Regimes.CheckpointDir)
       .orElse(sys.env.get("SPARK_GRAFT_CKPT_DIR"))
       .getOrElse(System.getProperty("java.io.tmpdir"))
 
@@ -2043,19 +2013,10 @@ object GraphOps {
   private val SccOuterCap = 8
   private val SccTrimCap = 40
   private val SccPropCap = 64
-  // Post-trim cores under these caps finish on the DRIVER with one
-  // iterative Tarjan pass over the collected core edge list — the
-  // g46 bounded-hybrid precedent (label/core-sized collect behind an
-  // explicit cap, never corpus rows, distributed FW-BW as the
-  // over-cap path): the color/mark fixpoints are core-DIAMETER many
-  // sequential driver rounds of tiny data, which one in-memory pass
-  // replaces outright. At-cap driver heap (primitive-array collect,
-  // see the fast-path comment): 2×16M-long edge arrays (256 MB) +
-  // 4M-long node array (32 MB) + CSR ints (~100 MB) + output pairs
-  // (~160 MB) ≈ 0.6 GB transient — sized for a 4 GB driver with
-  // headroom, NOT for this host's 128 GB.
-  private val SccDriverNodeCapDefault = 4000000L
-  private val SccDriverEdgeCapDefault = 16000000L
+  // Post-trim cores under the driver caps finish on the DRIVER with
+  // one iterative Tarjan pass over the collected core edge list: the
+  // color/mark fixpoints are core-DIAMETER many sequential driver
+  // rounds of tiny data, which one in-memory pass replaces outright.
 
   /** Frontier (delta) min-label fixpoint: per round only nodes whose
     * label improved last round probe the edge table — the g44
@@ -2248,8 +2209,8 @@ object GraphOps {
       // the edge-scan path for that round.
       var eTrim = e
       var shrunk = false
-      val probeCap = longConf(spark, "spark.graft.scc.trimAdjProbeCap", 65536L)
-      val hubCap = longConf(spark, "spark.graft.scc.trimHubDegCap", 1048576L)
+      val probeCap = Regimes.SccTrimAdjProbeCap(spark)
+      val hubCap = Regimes.SccTrimHubDegCap(spark)
       // The adjacency build costs ~one full-E pass (the thing the
       // probe exists to avoid), so it only pays when SEVERAL small
       // rounds remain. Remaining tail length is unknowable upfront;
@@ -2259,7 +2220,7 @@ object GraphOps {
       // regression). Build only after `trimProbeAfter` CONSECUTIVE
       // small waves — short tails never build, long tails amortize
       // the build across their remaining dozens of rounds.
-      val probeAfter = longConf(spark, "spark.graft.scc.trimProbeAfter", 2L)
+      val probeAfter = Regimes.SccTrimProbeAfter(spark)
       var smallStreak = 0L
       var adj: DataFrame = null      // node → (out[], in[]) sans hubs
       var hubs: DataFrame = null     // the excluded nodes
@@ -2360,10 +2321,8 @@ object GraphOps {
           .select(col("src"), col("dst"))
           .repartition(col("src")).localCheckpoint(true)
         val coreEdges = e.count()
-        if (remCnt <= longConf(spark, "spark.graft.scc.driverNodeCap",
-              SccDriverNodeCapDefault) &&
-            coreEdges <= longConf(spark, "spark.graft.scc.driverEdgeCap",
-              SccDriverEdgeCapDefault)) {
+        if (remCnt <= Regimes.DriverNodeCap(spark) &&
+            coreEdges <= Regimes.DriverEdgeCap(spark)) {
           // bounded-core fast path: one iterative Tarjan pass over
           // the collected core replaces BOTH propagation fixpoints
           // AND all later outer rounds (it emits every core SCC,
@@ -2534,15 +2493,12 @@ object GraphOps {
   private val BoruvkaJumps = 2
   private val BoruvkaOuterUnroll = 12
   private val BoruvkaJumpUnroll = 8
-  // Rounds whose pick table fits under this row cap contract on the
-  // DRIVER (union-find over the label pointer graph — label-count
-  // rows, at-least-halving per round, never corpus rows) and relabel
-  // the live edge set through a BROADCAST map: the edge table is
-  // scanned once per round with zero relabel shuffles. Over the cap
-  // (early rounds of a 100 TB graph) the distributed 2-cycle-break +
-  // pointer-jump path below runs instead — the hybrid both scales
-  // and keeps gate-scale rounds cheap. 4M rows ≈ 64 MB collected.
-  private val BoruvkaDriverContractCapDefault = 4000000L
+  // Rounds whose pick table fits under the driver node cap contract
+  // on the DRIVER (union-find over the label pointer graph) and
+  // relabel the live edge set through a BROADCAST map: the edge table
+  // is scanned once per round with zero relabel shuffles. Over the
+  // cap (early rounds of a 100 TB graph) the distributed 2-cycle-
+  // break + pointer-jump path below runs instead.
 
   private[graft] def mstCostEdges(spark: SparkSession, dir: String): DataFrame =
     GraphTables.weightedEdges(spark, dir)
@@ -2593,138 +2549,128 @@ object GraphOps {
     // relabel map — per-round AQE re-planning is pure latency at gate
     // scale; the auto policy keeps AQE (runtime skew splits) once the
     // edge set passes the threshold.
-    // `spark.graft.boruvka.fused=false` restores the r13 shape (eager
-    // checkpoints, adaptive rounds) — the in-session A/B lever
-    // (AbProbe) and the safety valve if a deployment's rounds prefer
-    // adaptive planning.
-    val fused = spark.conf.get("spark.graft.boruvka.fused", "true") == "true"
-    def contractionLoop(): Unit =
-    while (!done && r < BoruvkaSparkCap) {
-      val picked = e.groupBy(col("cu"))
-        .agg(min(struct(col("cost"), col("a"), col("b"), col("cv"))).as("m"))
-        .select(col("cu").as("node"), col("m.cost").as("cost"),
-          col("m.a").as("a"), col("m.b").as("b"), col("m.cv").as("par"))
-        .localCheckpoint(!fused)
-      val nPicked = picked.count()
-      if (sys.env.contains("GRAFT_SCC_DEBUG"))
-        System.err.println(s"[boruvka] r=$r picked=$nPicked t=${System.nanoTime() / 1000000}")
-      if (nPicked == 0L) done = true
-      else {
-        // lazy select off the checkpointed pick — no per-round job;
-        // mutual picks and cross-round re-picks dedup once at the end
-        forest += picked.select(col("a"), col("b"), col("cost"))
-        val (pmap, small) =
-          if (nPicked <= longConf(spark, "spark.graft.boruvka.driverContractCap",
-              BoruvkaDriverContractCapDefault)) {
-            // FULL contraction on the driver: the pointer graph has one
-            // row per live label (never corpus rows) and at least
-            // halves each round. Union-find replaces the 3-join
-            // break+jump chain (and its per-round driver jobs); the
-            // resulting label → min-root map broadcasts into the
-            // relabel, so the edge set is scanned ONCE with ZERO
-            // relabel shuffles this round. Representative naming
-            // cannot change the forest: picks aggregate over label
-            // SETS and (cost, a, b) are physical edge attributes.
-            val pairs = picked.select(col("node"), col("par")).collect()
-              .map(row => (row.getLong(0), row.getLong(1)))
-            val par = new java.util.HashMap[Long, Long](pairs.length * 2)
-            pairs.foreach { case (n, p) => par.put(n, p) }
-            // the oracle's 2-cycle break, replayed exactly: a mutual-
-            // min pair roots at its least endpoint
-            val broken = pairs.map { case (n, p) =>
-              if (par.getOrDefault(p, p) == n) (n, math.min(n, p)) else (n, p)
-            }
-            // chain-depth audit for the oracle's FIXED jump horizon:
-            // with full contraction both engines see the IDENTICAL
-            // per-round pointer graph, so depth ≤ 2^JumpUnroll here
-            // certifies the unrolled oracle contracted fully too
-            val bmap = new java.util.HashMap[Long, Long](broken.length * 2)
-            broken.foreach { case (n, p) => bmap.put(n, p) }
-            val depth = new java.util.HashMap[Long, Integer](broken.length * 2)
-            def depthOf(x0: Long): Int = {
-              var x = x0
-              val stack = new java.util.ArrayDeque[java.lang.Long]()
-              while (depth.get(x) == null && bmap.getOrDefault(x, x) != x) {
-                stack.push(x); x = bmap.get(x)
-              }
-              var d: Int = if (depth.get(x) != null) depth.get(x) else 0
-              while (!stack.isEmpty) { d += 1; depth.put(stack.pop(), d) }
-              d
-            }
-            broken.foreach { case (n, _) =>
-              val d = depthOf(n); if (d > maxChainDepth) maxChainDepth = d
-            }
-            // union-find with path compression, min-label roots
-            val uf = new java.util.HashMap[Long, Long](broken.length * 2)
-            def find(x0: Long): Long = {
-              var x = x0
-              while (uf.getOrDefault(x, x) != x) x = uf.get(x)
-              var y = x0
-              while (uf.getOrDefault(y, y) != y) {
-                val nxt = uf.get(y); uf.put(y, x); y = nxt
-              }
-              x
-            }
-            broken.foreach { case (n, p) =>
-              val rn = find(n); val rp = find(p)
-              if (rn != rp) {
-                if (rn < rp) uf.put(rp, rn) else uf.put(rn, rp)
-              }
-            }
-            val mapping = pairs.map { case (n, _) => (n, find(n)) }.toSeq
-            (broadcast(mapping.toDF("node", "par")), true)
-          } else {
-            allDriverRounds = false
-            // distributed partial contraction (over-cap rounds of a
-            // 100 TB graph): 2-cycle break — under a total edge order
-            // every pointer cycle is a mutual-min 2-cycle, its least
-            // endpoint becomes the root — then fixed pointer jumping
-            // (composed lazily, one materialization); longer chains
-            // unify over later rounds, sound by the cut property
-            var p = picked.as("p")
-              .join(picked.as("q"), col("p.par") === col("q.node"))
-              .select(col("p.node").as("node"),
-                when(col("q.par") === col("p.node"),
-                  least(col("p.node"), col("p.par")))
-                  .otherwise(col("p.par")).as("par"))
-            for (_ <- 1 to BoruvkaJumps)
-              p = p.as("p").join(p.as("q"), col("p.par") === col("q.node"))
-                .select(col("p.node").as("node"), col("q.par").as("par"))
-            (p.localCheckpoint(true), false)
-          }
-        // relabel, then REDUCE to the lexicographic-min edge per
-        // ordered label pair: the pick only ever reads each pair's
-        // min (min of mins is unchanged), so carrying parallel edges
-        // across rounds is pure waste — this bounds every round's
-        // checkpoint by the CONTRACTED graph size, not the original
-        // E (at sf10 the unreduced round-1 survivor set was ~100M
-        // parallel edges between 89k labels and OOM'd the round-2
-        // relabel; reduced it is ≤ the distinct pair count). The
-        // aggregate map-side combines, so the big input never
-        // shuffles raw.
-        // LAZY: the next round's pick count materializes this in the
-        // same job as the pick itself (fill-in jobs for any partition
-        // the count somehow skipped are Spark's LocalRDDCheckpointData
-        // contract — count skips none)
-        e = e.join(pmap.select(col("node").as("cu"), col("par").as("ncu")), Seq("cu"))
-          .join(pmap.select(col("node").as("cv"), col("par").as("ncv")), Seq("cv"))
-          .filter(col("ncu") =!= col("ncv"))
-          .groupBy(col("ncu"), col("ncv"))
-          .agg(min(struct(col("cost"), col("a"), col("b"))).as("m"))
-          .select(col("ncu").as("cu"), col("ncv").as("cv"),
-            col("m.cost").as("cost"), col("m.a").as("a"), col("m.b").as("b"))
-          .localCheckpoint(!fused)
+    graft.util.Loops.quiet(spark,
+        if (loopRows >= 0L) loopRows else graft.util.Loops.memoRows(wc)) {
+      while (!done && r < BoruvkaSparkCap) {
+        val picked = e.groupBy(col("cu"))
+          .agg(min(struct(col("cost"), col("a"), col("b"), col("cv"))).as("m"))
+          .select(col("cu").as("node"), col("m.cost").as("cost"),
+            col("m.a").as("a"), col("m.b").as("b"), col("m.cv").as("par"))
+          .localCheckpoint(false)
+        val nPicked = picked.count()
         if (sys.env.contains("GRAFT_SCC_DEBUG"))
-          System.err.println(s"[boruvka] r=$r relabeled t=${System.nanoTime() / 1000000}")
-        r += 1
+          System.err.println(s"[boruvka] r=$r picked=$nPicked t=${System.nanoTime() / 1000000}")
+        if (nPicked == 0L) done = true
+        else {
+          // lazy select off the checkpointed pick — no per-round job;
+          // mutual picks and cross-round re-picks dedup once at the end
+          forest += picked.select(col("a"), col("b"), col("cost"))
+          val (pmap, small) =
+            if (nPicked <= Regimes.DriverNodeCap(spark)) {
+              // FULL contraction on the driver: the pointer graph has one
+              // row per live label (never corpus rows) and at least
+              // halves each round. Union-find replaces the 3-join
+              // break+jump chain (and its per-round driver jobs); the
+              // resulting label → min-root map broadcasts into the
+              // relabel, so the edge set is scanned ONCE with ZERO
+              // relabel shuffles this round. Representative naming
+              // cannot change the forest: picks aggregate over label
+              // SETS and (cost, a, b) are physical edge attributes.
+              val pairs = picked.select(col("node"), col("par")).collect()
+                .map(row => (row.getLong(0), row.getLong(1)))
+              val par = new java.util.HashMap[Long, Long](pairs.length * 2)
+              pairs.foreach { case (n, p) => par.put(n, p) }
+              // the oracle's 2-cycle break, replayed exactly: a mutual-
+              // min pair roots at its least endpoint
+              val broken = pairs.map { case (n, p) =>
+                if (par.getOrDefault(p, p) == n) (n, math.min(n, p)) else (n, p)
+              }
+              // chain-depth audit for the oracle's FIXED jump horizon:
+              // with full contraction both engines see the IDENTICAL
+              // per-round pointer graph, so depth ≤ 2^JumpUnroll here
+              // certifies the unrolled oracle contracted fully too
+              val bmap = new java.util.HashMap[Long, Long](broken.length * 2)
+              broken.foreach { case (n, p) => bmap.put(n, p) }
+              val depth = new java.util.HashMap[Long, Integer](broken.length * 2)
+              def depthOf(x0: Long): Int = {
+                var x = x0
+                val stack = new java.util.ArrayDeque[java.lang.Long]()
+                while (depth.get(x) == null && bmap.getOrDefault(x, x) != x) {
+                  stack.push(x); x = bmap.get(x)
+                }
+                var d: Int = if (depth.get(x) != null) depth.get(x) else 0
+                while (!stack.isEmpty) { d += 1; depth.put(stack.pop(), d) }
+                d
+              }
+              broken.foreach { case (n, _) =>
+                val d = depthOf(n); if (d > maxChainDepth) maxChainDepth = d
+              }
+              // union-find with path compression, min-label roots
+              val uf = new java.util.HashMap[Long, Long](broken.length * 2)
+              def find(x0: Long): Long = {
+                var x = x0
+                while (uf.getOrDefault(x, x) != x) x = uf.get(x)
+                var y = x0
+                while (uf.getOrDefault(y, y) != y) {
+                  val nxt = uf.get(y); uf.put(y, x); y = nxt
+                }
+                x
+              }
+              broken.foreach { case (n, p) =>
+                val rn = find(n); val rp = find(p)
+                if (rn != rp) {
+                  if (rn < rp) uf.put(rp, rn) else uf.put(rn, rp)
+                }
+              }
+              val mapping = pairs.map { case (n, _) => (n, find(n)) }.toSeq
+              (broadcast(mapping.toDF("node", "par")), true)
+            } else {
+              allDriverRounds = false
+              // distributed partial contraction (over-cap rounds of a
+              // 100 TB graph): 2-cycle break — under a total edge order
+              // every pointer cycle is a mutual-min 2-cycle, its least
+              // endpoint becomes the root — then fixed pointer jumping
+              // (composed lazily, one materialization); longer chains
+              // unify over later rounds, sound by the cut property
+              var p = picked.as("p")
+                .join(picked.as("q"), col("p.par") === col("q.node"))
+                .select(col("p.node").as("node"),
+                  when(col("q.par") === col("p.node"),
+                    least(col("p.node"), col("p.par")))
+                    .otherwise(col("p.par")).as("par"))
+              for (_ <- 1 to BoruvkaJumps)
+                p = p.as("p").join(p.as("q"), col("p.par") === col("q.node"))
+                  .select(col("p.node").as("node"), col("q.par").as("par"))
+              (p.localCheckpoint(true), false)
+            }
+          // relabel, then REDUCE to the lexicographic-min edge per
+          // ordered label pair: the pick only ever reads each pair's
+          // min (min of mins is unchanged), so carrying parallel edges
+          // across rounds is pure waste — this bounds every round's
+          // checkpoint by the CONTRACTED graph size, not the original
+          // E (at sf10 the unreduced round-1 survivor set was ~100M
+          // parallel edges between 89k labels and OOM'd the round-2
+          // relabel; reduced it is ≤ the distinct pair count). The
+          // aggregate map-side combines, so the big input never
+          // shuffles raw.
+          // LAZY: the next round's pick count materializes this in the
+          // same job as the pick itself (fill-in jobs for any partition
+          // the count somehow skipped are Spark's LocalRDDCheckpointData
+          // contract — count skips none)
+          e = e.join(pmap.select(col("node").as("cu"), col("par").as("ncu")), Seq("cu"))
+            .join(pmap.select(col("node").as("cv"), col("par").as("ncv")), Seq("cv"))
+            .filter(col("ncu") =!= col("ncv"))
+            .groupBy(col("ncu"), col("ncv"))
+            .agg(min(struct(col("cost"), col("a"), col("b"))).as("m"))
+            .select(col("ncu").as("cu"), col("ncv").as("cv"),
+              col("m.cost").as("cost"), col("m.a").as("a"), col("m.b").as("b"))
+            .localCheckpoint(false)
+          if (sys.env.contains("GRAFT_SCC_DEBUG"))
+            System.err.println(s"[boruvka] r=$r relabeled t=${System.nanoTime() / 1000000}")
+          r += 1
+        }
       }
     }
-    if (fused)
-      graft.util.Loops.quiet(spark,
-        if (loopRows >= 0L) loopRows else graft.util.Loops.memoRows(wc)) {
-        contractionLoop()
-      }
-    else contractionLoop()
     if (!done) throw new IllegalStateException(
       s"Borůvka did not finish within $BoruvkaSparkCap rounds")
     // Oracle-horizon assert (gate scales run every round under the
@@ -3051,14 +2997,13 @@ object GraphOps {
       .select(least(col("a"), col("b")).as("u"),
         greatest(col("a"), col("b")).as("v"), col("sup"))
 
-  def g33Ktruss(spark: SparkSession, dir: String): DataFrame = {
+  /** `maxRounds` above the default is for the ScaleTrail delta-tail
+    * probe only (extended peels expose the tiny converged-tail waves
+    * where the delta path is supposed to earn its keep); the gated
+    * query and its 3-round unrolled DuckDB oracle run the default. */
+  def g33Ktruss(spark: SparkSession, dir: String,
+      maxRounds: Int = TrussRounds): DataFrame = {
     graft.functions.GraftFunctions.registerAll(spark)
-    // Round budget conf-overridable for the ScaleTrail delta-tail
-    // probe ONLY (extended peels expose the tiny-converged-tail waves
-    // where the delta path is supposed to earn its keep); the gated
-    // query and its 3-round unrolled DuckDB oracle always run the
-    // default.
-    val maxRounds = longConf(spark, "spark.graft.truss.rounds", TrussRounds.toLong).toInt
     // round 0 reuses g7's DfCache'd oriented layout — the peel shares
     // its starting tables with the triangle count and g19
     var ord = g7OrientedEdges(spark, dir)
@@ -3121,7 +3066,7 @@ object GraphOps {
     // exists from round 1 so the per-round mtime touch below always
     // lands (the sweep reads the DIR's mtime, which only moves when a
     // direct child is created/deleted — a single >2 h round, plausible
-    // at sf10+ with raised spark.graft.truss.rounds, would otherwise
+    // at sf10+ with a raised `maxRounds`, would otherwise
     // get its live checkpoint reaped by a concurrent peel's sweep)
     new java.io.File(ckptBase).mkdirs()
     def roundPath(i: Int) = s"$ckptBase/round_$i"
@@ -3177,22 +3122,21 @@ object GraphOps {
     // wins on truly tiny converged-tail waves. 1024 keeps it to those
     // (sf0.01's waves are 67 then 2); sf0.1+ peels run all-full, the
     // measured floor. Conf-overridable for graphs with small waves.
-    val deltaCap = longConf(spark, "spark.graft.truss.deltaWaveCap", 1024L)
+    val deltaCap = Regimes.TrussDeltaWaveCap(spark)
     // In-memory round checkpoints under a size cap (optimization r14,
     // guide §6/§5): the parquet-per-round discipline exists for sf10's
     // scratch-disk math (119.6M-edge projection, ~34 GB peak — see the
     // block comment above) and costs each gate-scale round a full
     // write+read of the survivor set PLUS the lost ou-partitioning
     // (one E-row exchange into the next adjacency build). Under
-    // `spark.graft.truss.memCkptCap` round-0 edges (default 16M rows ≈
+    // `Regimes.TrussMemCkptCap` round-0 edges (default 16M rows ≈
     // ≤0.4 GB serialized — trivial next to the block manager's share
     // of a 128 GB heap, and freed by the 30 s periodic GC) the rounds
     // localCheckpoint instead: no disk round-trip, partitioning
     // PRESERVED across rounds (LogicalRDD keeps outputPartitioning),
     // identical trajectory. The cap reads traj(0) — already counted —
     // so the gate costs zero extra jobs.
-    val memCkpt = traj(0)._2 <=
-      longConf(spark, "spark.graft.truss.memCkptCap", 16000000L)
+    val memCkpt = traj(0)._2 <= Regimes.TrussMemCkptCap(spark)
     var curSup: DataFrame = null   // survivors (ou, ov, sup) of the last round
     var curWave: DataFrame = null  // edges the last round removed — CHECKPOINTED
                                    // whenever a delta round may consume it
@@ -3295,7 +3239,7 @@ object GraphOps {
         // the localCheckpoint, so the count is free — broadcast only
         // under the cap, shuffle-join above it (identical trajectory,
         // different physical join).
-        val decCap = longConf(spark, "spark.graft.truss.deltaDecBroadcastCap", 1000000L)
+        val decCap = Regimes.TrussDeltaDecBroadcastCap(spark)
         val decSide = if (dec.count() <= decCap) broadcast(dec) else dec
         val updated = curSup.join(decSide,
             col("ou") === col("u") && col("ov") === col("v"), "left")
@@ -4030,7 +3974,7 @@ object GraphOps {
     "g36_component_sizes" -> (g36ComponentSizes _),
     "g35_coreness" -> (g35Coreness _),
     "g34_rich_club" -> (g34RichClub _),
-    "g33_ktruss" -> (g33Ktruss _),
+    "g33_ktruss" -> ((s, d) => g33Ktruss(s, d)),
     "g32_modularity" -> (g32Modularity _),
     "g31_strength_distribution" -> (g31StrengthDistribution _),
     "g30_metapath_census" -> (g30MetapathCensus _),

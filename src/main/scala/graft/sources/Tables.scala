@@ -30,6 +30,14 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * streaming and checkpoint re-reads keep plain reads. The lookup, the
   * inference on a miss and the `putIfAbsent` run without a lock:
   * threads racing on a cold key may both infer, which is harmless.
+  *
+  * Side effect: loading `events` sets
+  * `spark.sql.legacy.parquet.nanosAsLong=true` on the caller's session
+  * conf and leaves it set (see `microsTs`). Every later parquet read
+  * in that session, a user's own included, reads TIMESTAMP(NANOS)
+  * columns as raw longs, and because the setting is part of the memo
+  * key, a table loaded both before and after the session's first
+  * events load has its schema inferred twice.
   */
 object Tables {
   val all: Seq[String] = Seq(

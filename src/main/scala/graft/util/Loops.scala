@@ -23,23 +23,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cached edge side's fixed partitioning can't be re-split anyway) but
   * real once the per-round joined side reaches cluster scale. So the
   * policy is decided by DATA, not by a local-mode-leaning default
-  * (r13 verdict #9): `spark.graft.loop.aqe` =
-  *  - "auto" (default): rounds run AQE-quiet unless the caller-supplied
-  *    per-round row estimate (the loop's edge/vector side, memoized
-  *    once per cached table) reaches
-  *    `spark.graft.loop.aqe.autoRowThreshold` (default 64M rows —
-  *    beyond that the round's frontier⋈edges join is big enough that
-  *    one runtime skew split pays for every re-planning it costs);
-  *  - "true": always adaptive (a 100 TB deployment that wants runtime
-  *    skew handling inside every round);
-  *  - "false": always quiet (the measured-fastest local regime).
+  * (r13 verdict #9): rounds run AQE-quiet unless the caller-supplied
+  * per-round row estimate (the loop's edge/vector side, memoized once
+  * per cached table) reaches [[AutoRowThreshold]] — beyond that the
+  * round's frontier⋈edges join is big enough that one runtime skew
+  * split pays for every re-planning it costs. A 100 TB deployment
+  * therefore keeps AQE in its rounds, and gate scale runs quiet.
   */
 object Loops {
-  /** Per-round row count above which "auto" keeps AQE on inside loop
+  /** Per-round row count at which a loop keeps AQE on inside its
     * rounds. 64M rows ≈ a ≥1 GB per-round join side at two longs per
     * row — the scale where §2.5 skew handling starts mattering more
     * than per-round re-planning latency. */
-  val AutoRowThresholdDefault = 64000000L
+  val AutoRowThreshold = 64000000L
 
   // Memoized row counts for loop-scale estimates: the tables passed in
   // are DfCache-persisted (counted once by the bench warm-up anyway),
@@ -57,52 +53,42 @@ object Loops {
     }
   }
 
-  // Reentrancy depth per session (advisor r13): quiet scopes can nest
-  // when one operator's loop body invokes another looped operator.
-  // Only the OUTERMOST scope snapshots and restores the AQE conf, so
-  // a nested scope exiting early can never re-enable AQE mid-loop or
-  // leave it off after the outer scope ends. Session conf is
-  // process-wide per session, so concurrent loops on DIFFERENT threads
-  // of the SAME session would still interleave scopes — the engine
-  // runs queries on a session single-threaded (documented assumption;
-  // the depth map is synchronized so even a violation cannot corrupt
-  // the depth counter itself).
+  // Scope depth per session. Session conf is process-wide per session,
+  // so concurrent loops on different threads of the SAME session would
+  // interleave scopes; the engine runs a session's queries single-
+  // threaded (the map is synchronized so even a violation cannot
+  // corrupt the counter itself).
   private val quietDepth = new java.util.HashMap[SparkSession, Integer]()
 
-  /** Run `body` with AQE disabled for the loop's rounds, unless policy
-    * (see object doc) says this loop is big enough to keep runtime
-    * skew handling. `loopRows` is the caller's per-round row estimate
-    * (edge/vector side); negative = unknown, treated as small (the
-    * pre-r14 behavior). Lazily evaluated — only consulted in "auto". */
+  /** Run `body` with AQE disabled for the loop's rounds, unless
+    * `loopRows`, the caller's per-round row estimate (edge/vector
+    * side), reaches [[AutoRowThreshold]]; negative = unknown, treated
+    * as small. Scopes nest when one looped operator's body invokes
+    * another, and the outermost scope's policy wins: an inner scope
+    * neither reads its own `loopRows` nor touches AQE, so it can never
+    * re-enable AQE mid-loop or leave it off after the outer scope ends.
+    * An inner big loop inside a quiet outer one runs quiet, and an
+    * inner small loop inside an adaptive outer one keeps AQE. */
   def quiet[T](spark: SparkSession, loopRows: => Long = -1L)(body: => T): T = {
-    val mode = spark.conf.get("spark.graft.loop.aqe", "auto")
-    val keepAqe = mode match {
-      case "true"  => true
-      case "false" => false
-      case _ =>
-        val threshold = try {
-          spark.conf.get("spark.graft.loop.aqe.autoRowThreshold",
-            AutoRowThresholdDefault.toString).toLong
-        } catch { case _: NumberFormatException => AutoRowThresholdDefault }
-        loopRows >= threshold
+    val outermost = synchronized {
+      val d = quietDepth.getOrDefault(spark, 0)
+      quietDepth.put(spark, d + 1)
+      d == 0
     }
-    if (keepAqe) body
-    else {
-      val key = "spark.sql.adaptive.enabled"
-      val outermost = synchronized {
-        val d = quietDepth.getOrDefault(spark, 0)
-        quietDepth.put(spark, d + 1)
-        d == 0
+    val key = "spark.sql.adaptive.enabled"
+    var prev: Option[String] = None
+    try {
+      if (outermost && loopRows < AutoRowThreshold) {
+        prev = Some(spark.conf.get(key, "true"))
+        spark.conf.set(key, "false")
       }
-      val prev = spark.conf.get(key, "true")
-      if (outermost) spark.conf.set(key, "false")
-      try body finally {
-        synchronized {
-          val d = quietDepth.getOrDefault(spark, 1) - 1
-          if (d <= 0) quietDepth.remove(spark) else quietDepth.put(spark, d)
-        }
-        if (outermost) spark.conf.set(key, prev)
+      body
+    } finally {
+      synchronized {
+        val d = quietDepth.getOrDefault(spark, 1) - 1
+        if (d <= 0) quietDepth.remove(spark) else quietDepth.put(spark, d)
       }
+      prev.foreach(spark.conf.set(key, _))
     }
   }
 }

@@ -36,4 +36,14 @@ class AbProbeSpec extends AnyFunSuite {
       Seq("a.b" -> "1", "c.d" -> "x,y", "e" -> "2"))
     assert(AbProbe.parseConfs("") === Seq.empty)
   }
+
+  test("GRAFT_AB_CONF rejects an unknown spark.graft key and a non-numeric cap") {
+    // an unknown key would be ignored, timing the default regime as both A and B
+    val ok = "spark.graft.graph.broadcastCap=0,spark.graft.checkpointDir=/tmp/x,a.b=1"
+    assert(AbProbe.parseConfs(ok).size === 3)
+    Seq("spark.graft.loop.aqe=true", "spark.graft.graph.driverNodeCap=4M").foreach { bad =>
+      val err = intercept[IllegalArgumentException](AbProbe.parseConfs(s"a.b=1,$bad"))
+      assert(err.getMessage.contains(bad.takeWhile(_ != '=')), err.getMessage)
+    }
+  }
 }

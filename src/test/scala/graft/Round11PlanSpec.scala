@@ -1,19 +1,20 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.ForcedRegimes.bothPathsAgree
+import graft.util.Regimes
 
 /** Round-11 hardening pins: the three driver-side hybrid operators
   * (g40 pseudo-diameter, g45 SCC, g46 Borůvka) each have a bounded
   * driver fast path and a distributed over-cap path. At gate scale
   * the driver path always wins, so without these tests the
   * distributed branch — the ONLY branch that exists at 100 TB —
-  * would ship untested. The caps are conf-overridable
-  * (`spark.graft.{diam,scc,boruvka}.*`); forcing them to 0 routes
-  * the SAME gated entry point through the distributed branch, and
-  * result equality with the default (oracle-gated) path transitively
-  * hash-gates that branch. */
+  * would ship untested. Forcing the shared driver caps
+  * (`Regimes.DriverNodeCap` / `DriverEdgeCap`) to 0 routes the SAME
+  * gated entry point through the distributed branch, and result
+  * equality with the default (oracle-gated) path transitively
+  * hash-gates that branch ([[ForcedRegimes]]). */
 class Round11PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.01"
@@ -21,42 +22,22 @@ class Round11PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def rowsOf(df: DataFrame): Seq[Seq[Any]] =
-    df.collect().toSeq.map(_.toSeq)
-
-  /** Run `query` once with defaults and once with every cap conf in
-    * `caps` forced to 0 (⇒ distributed branch), compare full results. */
-  private def bothPathsAgree(query: String, caps: Seq[String]): Unit = {
-    val fast = rowsOf(SparkEntry.queries(query)(spark, dir))
-    caps.foreach(k => spark.conf.set(k, "0"))
-    try {
-      val dist = rowsOf(SparkEntry.queries(query)(spark, dir))
-      assert(fast.size == dist.size,
-        s"$query: row count diverged fast=${fast.size} distributed=${dist.size}")
-      fast.zip(dist).zipWithIndex.foreach { case ((f, d), i) =>
-        assert(f == d, s"$query row $i diverged: fast=$f distributed=$d")
-      }
-    } finally caps.foreach(spark.conf.unset)
-  }
-
   test("g40: forced over-cap distributed double sweep ≡ driver CSR fast path") {
-    bothPathsAgree("g40_pseudo_diameter",
-      Seq("spark.graft.diam.driverNodeCap", "spark.graft.diam.driverEdgeCap"))
+    bothPathsAgree(spark, dir, "g40_pseudo_diameter",
+      Regimes.DriverNodeCap, Regimes.DriverEdgeCap)
   }
 
   test("g45: forced over-cap distributed FW-BW ≡ driver Tarjan fast path") {
-    bothPathsAgree("g45_scc",
-      Seq("spark.graft.scc.driverNodeCap", "spark.graft.scc.driverEdgeCap"))
+    bothPathsAgree(spark, dir, "g45_scc", Regimes.DriverNodeCap, Regimes.DriverEdgeCap)
   }
 
   test("g46: forced over-cap distributed contraction ≡ driver union-find") {
-    bothPathsAgree("g46_boruvka",
-      Seq("spark.graft.boruvka.driverContractCap"))
+    bothPathsAgree(spark, dir, "g46_boruvka", Regimes.DriverNodeCap)
   }
 
   test("g33: tiny-wave delta rounds ≡ full re-enumeration trajectory") {
     // default path takes the wave-anchored DELTA rounds after round 1;
     // cap 0 forces every round through the full oriented enumeration
-    bothPathsAgree("g33_ktruss", Seq("spark.graft.truss.deltaWaveCap"))
+    bothPathsAgree(spark, dir, "g33_ktruss", Regimes.TrussDeltaWaveCap)
   }
 }

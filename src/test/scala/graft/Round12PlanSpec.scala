@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.ForcedRegimes.{agree, overCap}
+import graft.util.Regimes
 
-/** Round-12 hardening pins, following the Round11PlanSpec convention:
-  * every new hybrid path ships with a forced-path gate so the branch
-  * that exists only at scale is hash-gated at gate scale too.
+/** Round-12 hardening pins ([[ForcedRegimes]]):
   *
   *  - g45's trim gained an adjacency-PROBE path for small waves
   *    (V-row probe + Σ deg(dead) explode instead of 2 E-row scans per
@@ -29,42 +28,19 @@ class Round12PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def rowsOf(df: DataFrame): Seq[Seq[Any]] =
-    df.collect().toSeq.map(_.toSeq)
-
-  private def withConfs(confs: (String, String)*)(body: => Seq[Seq[Any]]): Seq[Seq[Any]] = {
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally confs.foreach { case (k, _) => spark.conf.unset(k) }
-  }
-
-  private def assertSame(tag: String, a: Seq[Seq[Any]], b: Seq[Seq[Any]]): Unit = {
-    assert(a.size == b.size, s"$tag: row count diverged ${a.size} vs ${b.size}")
-    a.zip(b).zipWithIndex.foreach { case ((x, y), i) =>
-      assert(x == y, s"$tag row $i diverged: $x vs $y")
-    }
-  }
-
   test("g45: trim adjacency-probe ≡ edge-scan ≡ all-hub fallback") {
     // trimProbeAfter=0 FORCES the probe to build on the first small
     // wave — the default streak gate (2) means short gate-scale trims
     // never engage it, which would leave the probe branch untested
-    val default = rowsOf(SparkEntry.queries("g45_scc")(spark, dir))
-    val probed = withConfs("spark.graft.scc.trimProbeAfter" -> "0") {
-      rowsOf(SparkEntry.queries("g45_scc")(spark, dir))
+    val probed = overCap(Regimes.SccTrimProbeAfter)
+    agree(spark, "g45", probed, probed :+ (Regimes.SccTrimHubDegCap -> 1L)) {
+      SparkEntry.queries("g45_scc")(spark, dir)
     }
-    assertSame("g45 edgescan-vs-probe", default, probed)
-    val allHub = withConfs("spark.graft.scc.trimProbeAfter" -> "0",
-        "spark.graft.scc.trimHubDegCap" -> "1") {
-      rowsOf(SparkEntry.queries("g45_scc")(spark, dir))
-    }
-    assertSame("g45 probe-vs-allhub", default, allHub)
   }
 
   test("g33: shuffle-joined decrement ≡ broadcast decrement trajectory") {
-    val default = rowsOf(SparkEntry.queries("g33_ktruss")(spark, dir))
-    val shuffled = withConfs("spark.graft.truss.deltaDecBroadcastCap" -> "0") {
-      rowsOf(SparkEntry.queries("g33_ktruss")(spark, dir))
+    agree(spark, "g33", overCap(Regimes.TrussDeltaDecBroadcastCap)) {
+      SparkEntry.queries("g33_ktruss")(spark, dir)
     }
-    assertSame("g33 dec-join", default, shuffled)
   }
 }

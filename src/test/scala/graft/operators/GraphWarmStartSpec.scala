@@ -89,14 +89,13 @@ class GraphWarmStartSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("g9: checkpoint root honors spark.graft.checkpointDir") {
     val root = java.nio.file.Files.createTempDirectory("graft_ckpt_root").toString
-    spark.conf.set("spark.graft.checkpointDir", root)
-    try {
+    graft.AbProbe.withConfs(spark, Seq(graft.util.Regimes.CheckpointDir -> root)) {
       val out = GraphOps.g9CheckpointRoundtrip(spark, dir)
       assert(rows(out) == rows(GraphOps.pagerank(spark, dir)))
       val dirKey = dir.replaceAll("[^A-Za-z0-9]", "_")
       assert(new java.io.File(s"$root/graft_ckpt_g9_$dirKey").exists(),
         "checkpoint must land under the configured root")
-    } finally spark.conf.unset("spark.graft.checkpointDir")
+    }
   }
 
   test("q23 KMV: plan is a partial object aggregate, not a global distinct+sort") {

@@ -51,7 +51,7 @@ class PersistHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("evict releases every RDD g6 and g18 persisted, level checkpoints included") {
     // cap 0: the per-hop shuffle regime, whose levels are checkpoints
-    val cap = "spark.graft.graph.broadcastCap"
+    val cap = graft.util.Regimes.GraphBroadcastCap.key
     graft.util.DfCache.evict(spark)
     spark.conf.set(cap, "0")
     try {

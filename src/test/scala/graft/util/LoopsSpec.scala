@@ -2,53 +2,25 @@ package graft.util
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the data-driven loop-AQE policy (r13 verdict #9) and the
-  * reentrancy contract (r13 advisor note).
-  *
-  * The policy: `spark.graft.loop.aqe` = auto (default) runs loop
-  * rounds AQE-quiet — the regime LoopProbe measured fastest at gate
-  * scale (g12: 6.38 s → 3.88 s) — UNLESS the caller's per-round row
-  * estimate reaches `spark.graft.loop.aqe.autoRowThreshold`, where a
-  * 100 TB round's frontier⋈edges join wants runtime skew splitting
-  * (guide §2.5) more than it wants per-round re-planning latency.
-  * Explicit true/false force either regime regardless of size.
-  */
+/** Pins the data-driven loop-AQE policy (r13 verdict #9): rounds run
+  * AQE-quiet unless the per-round row estimate reaches
+  * `Loops.AutoRowThreshold`; and the reentrancy contract (r13 advisor
+  * note): in nested scopes the outermost scope's policy wins. */
 class LoopsSpec extends AnyFunSuite {
   private lazy val spark = graft.GraftSession.local(2, 2)
   private val key = "spark.sql.adaptive.enabled"
 
-  private def aqeInside(mode: Option[String], rows: Long): String = {
-    mode match {
-      case Some(m) => spark.conf.set("spark.graft.loop.aqe", m)
-      case None    => spark.conf.unset("spark.graft.loop.aqe")
-    }
-    try Loops.quiet(spark, rows) { spark.conf.get(key) }
-    finally spark.conf.unset("spark.graft.loop.aqe")
-  }
+  private def aqeInside(rows: Long): String = Loops.quiet(spark, rows) { spark.conf.get(key) }
 
   test("auto: small loops run quiet, at-threshold loops keep AQE") {
     spark.conf.set(key, "true")
-    assert(aqeInside(None, 1000L) === "false",
+    assert(aqeInside(1000L) === "false",
       "a gate-scale loop must run AQE-quiet (the measured-fastest regime)")
-    assert(aqeInside(None, Loops.AutoRowThresholdDefault) === "true",
+    assert(aqeInside(Loops.AutoRowThreshold) === "true",
       "a threshold-sized loop must keep AQE for runtime skew splitting")
-    assert(aqeInside(None, -1L) === "false",
+    assert(aqeInside(-1L) === "false",
       "an unknown estimate is treated as small (the pre-r14 behavior)")
     assert(spark.conf.get(key) === "true", "AQE must be restored after the scope")
-  }
-
-  test("explicit overrides beat the size estimate in both directions") {
-    spark.conf.set(key, "true")
-    assert(aqeInside(Some("true"), 1000L) === "true")
-    assert(aqeInside(Some("false"), Long.MaxValue) === "false")
-    assert(spark.conf.get(key) === "true")
-  }
-
-  test("the auto threshold is conf-overridable") {
-    spark.conf.set(key, "true")
-    spark.conf.set("spark.graft.loop.aqe.autoRowThreshold", "500")
-    try assert(aqeInside(None, 501L) === "true")
-    finally spark.conf.unset("spark.graft.loop.aqe.autoRowThreshold")
   }
 
   test("nested quiet scopes: only the outermost restores (advisor r13)") {
@@ -59,8 +31,21 @@ class LoopsSpec extends AnyFunSuite {
       // the INNER scope exiting must not re-enable AQE mid-loop
       assert(spark.conf.get(key) === "false",
         "a nested scope's exit re-enabled AQE inside the outer loop")
+      // the outermost scope's policy wins: a threshold-sized inner
+      // loop inside a quiet outer one stays quiet
+      Loops.quiet(spark, Loops.AutoRowThreshold) {
+        assert(spark.conf.get(key) === "false", "a big inner scope turned AQE back on")
+      }
+      assert(spark.conf.get(key) === "false")
     }
     assert(spark.conf.get(key) === "true", "outermost exit must restore")
+    // and the reverse: a small inner loop inside an adaptive outer one
+    Loops.quiet(spark, Loops.AutoRowThreshold) {
+      Loops.quiet(spark, 1L) {
+        assert(spark.conf.get(key) === "true", "a small inner scope turned AQE off")
+      }
+    }
+    assert(spark.conf.get(key) === "true")
   }
 
   test("memoRows counts once and memoizes per DataFrame") {
