@@ -2,7 +2,7 @@ package graft
 
 /** In-session alternating A/B for conf-gated plan regimes — the
   * controlled instrument the r13 verdict asked optimization claims to
-  * carry (LoopProbe's min-of-N discipline, generalized): one JVM, one
+  * carry (a min-of-N discipline): one JVM, one
   * warm-up pass, then for each named query GRAFT_PROBE_REPS rounds of
   * [A: session defaults] immediately followed by [B: GRAFT_AB_CONF
   * applied] — alternation cancels host drift that separate

@@ -110,6 +110,38 @@ object Bench {
     * are the only signal that can't dodge the sampling. */
   val stealThresholdPct = 4.0
 
+  /** The health verdict that quarantines a run's timings (with any
+    * failure). `canaryStart`/`canaryEnd` are the two canary passes'
+    * median ratios vs the baseline, `material` the ratios of the
+    * ≥0.25 s board slots in board order, empty without a baseline.
+    *
+    * - Steal above [[stealThresholdPct]] is degraded.
+    * - A material median ≥1.12 over ≥50 slots is degraded even when
+    *   canaries and steal pass: one run read canary 1.09 and steal
+    *   3.59 % while untouched families e/q ran 15–20 % slow. A handful
+    *   of touched queries cannot move that median.
+    * - A canary pass above [[canaryThreshold]] is degraded unless the
+    *   board outvotes it: the 0.15–0.3 s canary slots carry scheduler
+    *   noise (the r13 close read canary 5.84 at steal 0.44 % while the
+    *   329-slot board's median was 0.96). The board outvotes only with
+    *   ≥50 material slots at median ≤1.10, steal within bounds, and the
+    *   end canary or the tail half of the material slots passing on its
+    *   own. A contention window late in the run inflates the end canary
+    *   and the board's tail but barely moves the whole-board median,
+    *   so that median alone cannot clear it. */
+  private[graft] def hostDegraded(canaryStart: Double, canaryEnd: Double,
+      material: Seq[Double], stealPct: Double): Boolean = {
+    def median(xs: Seq[Double]): Double =
+      if (xs.isEmpty) 0.0 else xs.sorted.apply(xs.size / 2)
+    val board = median(material)
+    val lateClean = canaryEnd <= canaryThreshold ||
+      median(material.drop(material.size / 2)) <= 1.10
+    val boardOutvotesCanary = material.size >= 50 && board > 0.0 &&
+      board <= 1.10 && stealPct <= stealThresholdPct && lateClean
+    (math.max(canaryStart, canaryEnd) > canaryThreshold && !boardOutvotesCanary) ||
+      stealPct > stealThresholdPct || (material.size >= 50 && board >= 1.12)
+  }
+
   /** (steal_ticks, total_ticks) from /proc/stat — Linux only; any
     * failure reads as (0, 0) and the guard degrades to canary-only.
     * Package-visible: the scale harnesses (ScaleTrail /
@@ -358,35 +390,8 @@ object Bench {
     val medianRatio =
       if (deltas.isEmpty) 0.0
       else deltas.map(_._2).sorted.apply(deltas.size / 2)
-    // Board-median canary override (r13 verdict #7): the 0.15–0.3 s
-    // canary slots carry scheduler noise a cross-host comparison can't
-    // average away — the r13 close read canary 5.84 with steal 0.44 %
-    // while the full 329-query board's median vs the SAME baseline was
-    // 0.96, and the quarantine keyed off the canary alone discarded a
-    // board that was fine. When ≥50 material (≥0.25 s) board slots are
-    // comparable against the baseline and their median says the host
-    // is within noise (≤1.10) AND steal agrees, the board outvotes the
-    // canary. A genuinely degraded host inflates the material median
-    // too (r11: whole table families moved 3–7×), so the override
-    // can't mask real degradation; with no baseline the material set
-    // is empty and the canary stays the sole signal.
-    val materialMedian =
-      if (material.isEmpty) 0.0
-      else material.map(_._2).sorted.apply(material.size / 2)
-    val boardOutvotesCanary = material.size >= 50 &&
-      materialMedian > 0.0 && materialMedian <= 1.10 &&
-      stealPct <= stealThresholdPct
-    // …and the board outvotes in the OTHER direction too: a run whose
-    // material median reads ≥1.12 vs the committed baseline is a
-    // degraded-host board even when the canaries and steal both pass
-    // (measured on this host: canary 1.09, steal 3.59 %, yet untouched
-    // families e/q ran 15–20 % slow — a sub-threshold contention
-    // window the 3 canary slots sampled past). The median spans ALL
-    // material slots, so a legitimate optimization round (a handful of
-    // touched queries) cannot trip it; only whole-board slowness can.
-    val boardMedianDegraded = material.size >= 50 && materialMedian >= 1.12
-    val hostDegraded = (canaryRatio > canaryThreshold && !boardOutvotesCanary) ||
-      stealPct > stealThresholdPct || boardMedianDegraded
+    val hostDegraded = Bench.hostDegraded(medianRatioOf(canary),
+      medianRatioOf(canaryEnd), material.map(_._2), stealPct)
     def ratioObj(es: Seq[(String, Double, Double)]): String =
       es.map { case (k, v, _) => "\"" + k + "\":" + r2(v) }.mkString("{", ",", "}")
     // movers-per-direction is shrunk below if the assembled line

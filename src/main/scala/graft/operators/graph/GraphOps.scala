@@ -794,12 +794,12 @@ object GraphOps {
        |FROM (SELECT node FROM s1 UNION ALL SELECT node FROM s2 UNION ALL SELECT node FROM s3) v
        |GROUP BY node ORDER BY visits DESC, node_id LIMIT 10""".stripMargin
 
-  // ---- g5: fixed-point integer PageRank, 3 iterations ----
-  // The (edge, out-degree) join is loop-invariant: compute it once,
-  // repartition by src, and cache — each iteration then shuffles only
-  // the (node, rank) vector (V rows), not the edge list (E rows).
-  // This is the AnalysisRound analog: a stable partitioning of the
-  // edge set reused across rounds (Runner.java:60).
+  // ---- g5, g9, g12–g16: the PageRank family ----
+  // One integer rank map ([[rankRounds]]) over two edge tables, each
+  // loop-invariant: computed once, repartitioned by src and cached, so
+  // a round shuffles only the (node, rank) vector (V rows), never the
+  // edge list (E rows). This is the AnalysisRound analog, a stable
+  // partitioning of the edge set reused across rounds (Runner.java:60).
   /** Loop-invariant (edge, out-degree) table, src-partitioned+sorted and
     * cached — shared by pagerank and warm-started runs, exposed so Bench
     * can attribute its build cost as an explicit warm-up entry. */
@@ -813,100 +813,140 @@ object GraphOps {
         .sortWithinPartitions(col("src"))
     }
 
-  /** `iters` PageRank rounds starting from `start` (node_id, rank) —
-    * the AnalysisRound warm-start (Runner.java:68 storeRound /
-    * ArrayStore.java:27 readIn): iteration N+1 of a 100-TB run resumes
-    * from the iteration-N parquet instead of the uniform vector.
-    * resumeFrom(k1) + k2 more rounds ≡ k1+k2 rounds from scratch,
-    * bit-exact (integer micro-unit arithmetic, no float drift) —
-    * asserted by GraphWarmStartSpec. The checkpoint must cover the
-    * current vertex set (same-graph resume); for a grown graph,
-    * restart or union missing nodes in with the uniform seed first. */
-  def pagerankFrom(spark: SparkSession, dir: String, start: DataFrame, iters: Int): DataFrame = {
-    val ew = edgesWithDeg(spark, dir)
+  /** `iters` rounds of the rank map from `start` (node_id, rank):
+    * r'(dst) = teleport(dst) + 85 · Σ_{src→dst} share DIV 100.
+    *
+    * `share` is one edge's contribution from its source's rank `r`:
+    * [[UniformShare]] (r DIV d) over [[edgesWithDeg]], or
+    * [[WeightedShare]] (r·w DIV wsum) over
+    * [[GraphTables.weightedEdges]], whose weights are the edge
+    * multiplicities. `teleport` is the per-node base: 0.15 on every
+    * node ([[everywhere]]) or on a source set only ([[onSources]],
+    * personalized PageRank, random walk with restart). Membership is
+    * a predicate in the round's aggregate projection, never a join.
+    *
+    * - Ranks are Long micro-units (1.0 = 10⁶) and every division is a
+    *   `DIV`, which truncates toward zero exactly like the oracle's
+    *   `//`: Spark and DuckDB agree bit-for-bit, with no float drift
+    *   at any cluster size.
+    * - Spark runs with ANSI on, so a Long overflow in `r * w` or the
+    *   `sum` throws instead of wrapping.
+    * - Warm-start law (Runner.java:68 storeRound / ArrayStore.java:27
+    *   readIn): k1 rounds, then k2 more from that vector, equal k1+k2
+    *   rounds from scratch, bit-exact (GraphWarmStartSpec). Iteration
+    *   N+1 of a 100-TB run resumes from the iteration-N parquet. The
+    *   vector must cover the current vertex set; for a grown graph,
+    *   restart or union the new nodes in from [[rankStart]] first.
+    * - A node with no in-edge is never a `dst`, so it drops out of
+    *   the vector after round 1. */
+  def rankRounds(edges: DataFrame, share: Column, teleport: Column => Column)(
+      start: DataFrame, iters: Int): DataFrame = {
     var r = start.select(col("node_id").as("node"), col("rank").as("r"))
     for (_ <- 1 to iters) {
-      r = ew
+      r = edges
         .join(r, col("src") === col("node"))
-        .select(col("dst"), expr("r DIV d").as("contrib"))
+        .select(col("dst"), share.as("contrib"))
         .groupBy(col("dst").as("node"))
-        .agg((lit(150000L) + expr("85 * sum(contrib) DIV 100")).as("r"))
+        .agg((teleport(col("dst")) + expr("85 * sum(contrib) DIV 100")).as("r"))
     }
     r.select(col("node").as("node_id"), col("r").as("rank"))
   }
 
-  /** The uniform start vector: every vertex at 1.0 (micro-units). */
+  val UniformShare: Column = expr("r DIV d")
+  val WeightedShare: Column = expr("(r * w) DIV wsum")
+
+  /** Rank 1.0 (the start mass) and the 0.15 teleport, in micro-units. */
+  val RankOne = 1000000L
+  val TeleportMicros = 150000L
+
+  /** `micros` on every node. */
+  def everywhere(micros: Long): Column => Column = _ => lit(micros)
+
+  /** `micros` on the nodes `isSource` picks, 0 elsewhere. */
+  def onSources(isSource: Column => Column, micros: Long): Column => Column =
+    n => when(isSource(n), lit(micros)).otherwise(lit(0L))
+
+  /** The start vector: every source node of `edges`, at `mass(node_id)`. */
+  def rankStart(edges: DataFrame, mass: Column => Column): DataFrame =
+    edges.select(col("src").as("node_id")).distinct()
+      .select(col("node_id"), mass(col("node_id")).as("rank"))
+
+  /** `iters` uniform rounds over [[edgesWithDeg]] from `start`: g5's map,
+    * and the entry point for resuming from a checkpoint. */
+  def pagerankFrom(spark: SparkSession, dir: String, start: DataFrame, iters: Int): DataFrame =
+    rankRounds(edgesWithDeg(spark, dir), UniformShare, everywhere(TeleportMicros))(start, iters)
+
+  /** The uniform start vector: every vertex at 1.0. */
   private[graft] def uniformRanks(spark: SparkSession, dir: String): DataFrame =
-    edgesWithDeg(spark, dir)
-      .select(col("src").as("node_id")).distinct()
-      .select(col("node_id"), lit(1000000L).as("rank"))
+    rankStart(edgesWithDeg(spark, dir), everywhere(RankOne))
 
   def pagerank(spark: SparkSession, dir: String, iters: Int = 3): DataFrame =
     graft.util.DfCache.cached(spark, dir, s"graph_pagerank_$iters") {
       pagerankFrom(spark, dir, uniformRanks(spark, dir), iters)
     }
 
+  /** A loop's stop test over one round's (max |Δrank|, max rank), and
+    * the text its failure reports. */
+  private[graft] final case class StopRule(desc: String, holds: (Long, Long) => Boolean)
+
+  /** Stop when max |Δ|·10⁶ ≤ relPpm·max(rank). Hub ranks, and so hub
+    * deltas, grow with degree skew, so an absolute tolerance runs ever
+    * more rounds on bigger graphs. Anchored to the vector's own max
+    * rank, the rule runs about the same number of rounds at any rank
+    * scale. The comparison runs in BigInt on the driver, once per
+    * round on two scalars: a Long product would wrap once hub deltas
+    * pass ~9.2e12 micro-units and silently stop at the minIters floor. */
+  private[graft] def relativeStop(relPpm: Long): StopRule =
+    StopRule(s"relative |delta| <= $relPpm ppm", (mxDelta, mxRank) =>
+      BigInt(mxDelta) * 1000000 <= BigInt(relPpm) * BigInt(mxRank))
+
   /** PageRank until max |Δrank| ≤ `tolMicros` — the reference's
     * run-until-budget loop (Runner.java:31 timeInSeconds) as a
     * tolerance criterion. The integer map has no exact fixed point on
     * near-bipartite graphs (the star-schema projection oscillates in
     * a small limit cycle), but |Δ| decays ~0.85×/round, so any
-    * tolerance above the cycle amplitude terminates. Each round is
-    * materialized via localCheckpoint (plan size constant in round
-    * count) — the same mechanics as [[minLabelFixpoint]]. Returns the
-    * vector and the round count; fails loudly if the budget runs out.
-    * `minIters` floors the stop check: from the uniform vector the
-    * delta is NON-monotone for the first rounds (it spikes at round 2
-    * once mass concentrates), so a tolerance met at round 1 is
-    * spurious, not converged. Driver-gated as g12 with a tolerance
-    * that fixes the round count at gate scale; GraphWarmStartSpec
-    * asserts it equals the same number of fixed rounds, bit-exact. */
+    * tolerance above the cycle amplitude terminates. Driver-gated as
+    * g12 with a tolerance that fixes the round count at gate scale. */
   def pagerankUntilDelta(spark: SparkSession, dir: String,
       tolMicros: Long = 10000L, maxIters: Int = 200,
       minIters: Int = 1): (DataFrame, Int) =
-    pagerankUntilStop(spark, dir, maxIters, minIters,
-      (mxDelta, _) => mxDelta <= tolMicros,
-      s"|delta| <= $tolMicros micros")
+    rankLoopUntilStop(uniformRanks(spark, dir), pagerankFrom(spark, dir, _, 1),
+      StopRule(s"|delta| <= $tolMicros micros", (mxDelta, _) => mxDelta <= tolMicros),
+      maxIters, minIters, graft.util.Loops.memoRows(edgesWithDeg(spark, dir)))
 
-  private def pagerankUntilStop(spark: SparkSession, dir: String,
-      maxIters: Int, minIters: Int, stop: (Long, Long) => Boolean,
-      ruleDesc: String): (DataFrame, Int) =
-    rankLoopUntilStop(uniformRanks(spark, dir),
-      r => pagerankFrom(spark, dir, r, 1), maxIters, minIters, stop, ruleDesc,
-      graft.util.Loops.memoRows(edgesWithDeg(spark, dir)))
-
-  /** The shared tolerance-loop machinery behind [[pagerankUntilDelta]]
-    * (absolute), [[pagerankUntilRelDelta]] (relative) and
-    * [[weightedPagerankUntilRelDelta]]: from `start`, apply `step`
-    * per round, and stop when `stop(maxDelta, maxRank)` first holds at
-    * or after round `minIters`.
+  /** The rank family's stop-checked loop: from `start`, apply `step`
+    * per round, and stop when `rule` first holds at or after round
+    * `minIters`. Returns the vector and the round count; fails loudly
+    * if `maxIters` runs out. `minIters` floors the stop check: from
+    * the uniform vector the delta is NON-monotone for the first rounds
+    * (it spikes at round 2 once mass concentrates), so a tolerance met
+    * at round 1 is spurious, not converged.
     *
-    * One Spark JOB per stop-checked round (optimization r13, guide
-    * §1.2 "per-task work after the algorithm"): the round's vector is
-    * localCheckpoint'ed LAZILY and the stop-check aggregate — which
-    * joins the previous (already-materialized) checkpoint on the fly —
-    * is the single action that materializes it. The old shape ran an
-    * eager checkpoint job (3-col vector incl. the delta) plus a second
-    * scan job for the maxima; measured at sf0.1 the fused round is
-    * 3.88 s vs 6.38 s over g12's 8 rounds (LoopProbe, min of 3,
-    * together with the Loops.quiet AQE scope — lazy checkpointing only
-    * fuses when `toRdd` does not eagerly materialize AQE stages).
-    * Rounds below `minIters` run zero jobs of their own: their chained
-    * lazy checkpoints are computed by the first stop-checked round's
-    * aggregate. The vector, the round count, and the stop scalars are
-    * bit-identical to the old shape — same integer arithmetic, same
-    * join, same maxima (GraphWarmStartSpec pins loop ≡ unroll).
+    * One Spark JOB per stop-checked round: the round's vector is
+    * localCheckpoint'ed LAZILY, and the stop-check aggregate, which
+    * joins the previous (already materialized) checkpoint on the fly,
+    * is the single action that materializes it. Each round is a
+    * checkpoint, so the plan stays constant in the round count. An
+    * earlier shape ran an eager checkpoint job plus a second scan job
+    * for the maxima; at sf0.1 (min of 3) the fused round took 3.88 s
+    * against 6.38 s over g12's 8 rounds, together with the Loops.quiet
+    * AQE scope (lazy checkpoints only fuse when `toRdd` does not
+    * eagerly materialize AQE stages). Rounds below `minIters` run no
+    * job of their own: the first stop-checked round's aggregate
+    * computes their chained lazy checkpoints.
     *
-    * PRECONDITION (r13 advisor note): bit-identity to the old
-    * stepped⋈prev shape holds because every current `step` (pagerank /
-    * weighted / personalized over symmetric edge tables) PRESERVES the
-    * vertex set — the returned vector is `stepped` alone, so a future
-    * step whose output node set differs from its input would KEEP
-    * nodes the old inner join dropped. Any new step must preserve the
-    * vertex set or re-derive this contract. */
-  private def rankLoopUntilStop(start: DataFrame, step: DataFrame => DataFrame,
-      maxIters: Int, minIters: Int, stop: (Long, Long) => Boolean,
-      ruleDesc: String, loopRows: => Long = -1L): (DataFrame, Int) =
+    * PRECONDITION: none on the step's vertex set. The returned vector
+    * is the last round's output alone, so it equals k unrolled rounds
+    * of `step` for the returned k, whatever the step does to the
+    * vertex set. The stop delta is an inner join of consecutive
+    * rounds, so it spans only the nodes present in both. Under
+    * [[rankRounds]] a node with no in-edge is in the start vector but
+    * drops out after round 1, and a vertex program that replaces this
+    * loop must drop it too. RankLoopSpec pins all three on a hand-fed
+    * graph. */
+  private[graft] def rankLoopUntilStop(start: DataFrame, step: DataFrame => DataFrame,
+      rule: StopRule, maxIters: Int, minIters: Int,
+      loopRows: => Long = -1L): (DataFrame, Int) =
     graft.util.Loops.quiet(start.sparkSession, loopRows) {
       var r = start.localCheckpoint(true)
       var it = 0
@@ -923,12 +963,12 @@ object GraphOps {
             .join(prev.select(col("node_id"), col("rank").as("prev")), "node_id")
             .agg(coalesce(max(abs(col("rank") - col("prev"))), lit(0L)),
               coalesce(max(col("rank")), lit(0L))).collect()(0)
-          done = stop(row.getLong(0), row.getLong(1))
+          done = rule.holds(row.getLong(0), row.getLong(1))
         }
         r = next
       }
       if (!done) throw new IllegalStateException(
-        s"pagerank did not reach $ruleDesc within $maxIters rounds")
+        s"pagerank did not reach ${rule.desc} within $maxIters rounds")
       (r, it)
     }
 
@@ -941,12 +981,12 @@ object GraphOps {
     * from the returned round count plus [[pagerankFrom]]: re-running
     * the same count from scratch is bit-exact, and a budget run can
     * be resumed from its own output (`start`) exactly as if the two
-    * budgets had been one (the warm-start law GraphWarmStartSpec
-    * pins). Tolerance ([[pagerankUntilDelta]]) is the better stop
-    * criterion for convergence; this mode exists for deadline-bounded
-    * scheduling, e.g. "refresh ranks for at most N minutes". Each
-    * round is localCheckpoint-materialized so the plan stays constant
-    * in round count — a budget can span hundreds of rounds. */
+    * budgets had been one (the warm-start law). Tolerance
+    * ([[pagerankUntilDelta]]) is the better stop criterion for
+    * convergence; this mode exists for deadline-bounded scheduling,
+    * e.g. "refresh ranks for at most N minutes". Each round is
+    * localCheckpoint-materialized so the plan stays constant in round
+    * count — a budget can span hundreds of rounds. */
   def pagerankForBudget(spark: SparkSession, dir: String, budgetMillis: Long,
       start: Option[DataFrame] = None, maxIters: Int = 10000): (DataFrame, Int) = {
     val deadline = System.nanoTime() + budgetMillis * 1000000L
@@ -965,29 +1005,12 @@ object GraphOps {
   def g5Pagerank(spark: SparkSession, dir: String): DataFrame =
     pagerank(spark, dir).orderBy(col("node_id"))
 
-  /** PageRank until max |Δrank| ≤ relPpm·max(rank)/10⁶ — the
-    * RELATIVE-tolerance stop rule. [[pagerankUntilDelta]]'s absolute
-    * `tolMicros` is the right knob only at one graph scale: the sf10
-    * scale trail showed hub ranks (and so hub deltas) grow with
-    * degree skew, so a fixed absolute tolerance runs ever more rounds
-    * on bigger graphs chasing deltas that are already proportionally
-    * tiny. Anchoring the tolerance to the vector's own max rank makes
-    * the stop rule scale-free: the loop runs the same number of
-    * rounds whatever the rank scale, because both sides of the
-    * comparison grow together. All-integer comparison
-    * (Δ·10⁶ ≤ relPpm·maxRank), evaluated in BigInt on the driver —
-    * it runs once per round on two scalars, and a raw Long product
-    * would wrap once hub deltas pass ~9.2e12 micro-units (plausible
-    * at billion-node scale), silently declaring convergence at the
-    * minIters floor. Fused into the same per-round checkpoint job as
-    * the absolute loop: the round materializes (rank, Δ) once, and
-    * the stop check scans the cached V rows for the two maxima. */
+  /** PageRank until [[relativeStop]] holds — the scale-free stop rule. */
   def pagerankUntilRelDelta(spark: SparkSession, dir: String,
       relPpm: Long, maxIters: Int = 200, minIters: Int = 1): (DataFrame, Int) =
-    pagerankUntilStop(spark, dir, maxIters, minIters,
-      (mxDelta, mxRank) =>
-        BigInt(mxDelta) * 1000000 <= BigInt(relPpm) * BigInt(mxRank),
-      s"relative |delta| <= $relPpm ppm")
+    rankLoopUntilStop(uniformRanks(spark, dir), pagerankFrom(spark, dir, _, 1),
+      relativeStop(relPpm), maxIters, minIters,
+      graft.util.Loops.memoRows(edgesWithDeg(spark, dir)))
 
   // ---- g12: tolerance-mode PageRank, driver-gated ----
   // The reference's run-until-budget loop (Runner.java:31) on the
@@ -1012,53 +1035,13 @@ object GraphOps {
 
   // ---- g15: WEIGHTED PageRank over edge multiplicities ----
   // The weighted random surfer: each neighbor receives rank in
-  // proportion to its edge weight (contrib = r·w DIV wsum per edge —
-  // integer floor, exact on both engines) instead of the uniform
-  // 1/deg split. Weights are the edge multiplicities the distinct
-  // edge list collapses ([[GraphTables.weightedEdges]]): co-purchase
-  // intensity, not mere adjacency. Same loop mechanics as g5 — the
-  // (edge, weight, weight-sum) table is loop-invariant, cached,
-  // src-partitioned; each round shuffles only the V-row vector.
-  /** `iters` weighted rounds from `start` over any (src, dst, w,
-    * wsum) edge table — callers can bring their own weights. */
-  def weightedPagerankFrom(wed: DataFrame, start: DataFrame, iters: Int): DataFrame = {
-    var r = start.select(col("node_id").as("node"), col("rank").as("r"))
-    for (_ <- 1 to iters) {
-      r = wed
-        .join(r, col("src") === col("node"))
-        .select(col("dst"), expr("(r * w) DIV wsum").as("contrib"))
-        .groupBy(col("dst").as("node"))
-        .agg((lit(150000L) + expr("85 * sum(contrib) DIV 100")).as("r"))
-    }
-    r.select(col("node").as("node_id"), col("r").as("rank"))
-  }
-
-  /** The relative-tolerance loop over the WEIGHTED graph — g14's
-    * scale-free stop rule composed with g15's weighted rounds (both
-    * delegate to the same [[rankLoopUntilStop]] machinery, so the
-    * checkpoint/minIters/fused-delta mechanics cannot drift between
-    * the weighted and unweighted variants; spec-pinned: with unit
-    * weights this is bit-exact the unweighted relative loop,
-    * including the round count). */
-  def weightedPagerankUntilRelDelta(spark: SparkSession, dir: String,
-      relPpm: Long, maxIters: Int = 200, minIters: Int = 1): (DataFrame, Int) = {
-    val wed = GraphTables.weightedEdges(spark, dir)
-    val start = wed.select(col("src").as("node_id")).distinct()
-      .select(col("node_id"), lit(1000000L).as("rank"))
-    rankLoopUntilStop(start, r => weightedPagerankFrom(wed, r, 1),
-      maxIters, minIters,
-      (mxDelta, mxRank) =>
-        BigInt(mxDelta) * 1000000 <= BigInt(relPpm) * BigInt(mxRank),
-      s"weighted relative |delta| <= $relPpm ppm",
-      graft.util.Loops.memoRows(wed))
-  }
-
+  // proportion to its edge weight, co-purchase intensity rather than
+  // mere adjacency ([[WeightedShare]] over the cached weighted edges).
   def g15WeightedPagerank(spark: SparkSession, dir: String): DataFrame =
     graft.util.DfCache.cached(spark, dir, "graph_wpr_3") {
       val wed = GraphTables.weightedEdges(spark, dir)
-      val start = wed.select(col("src").as("node_id")).distinct()
-        .select(col("node_id"), lit(1000000L).as("rank"))
-      weightedPagerankFrom(wed, start, 3)
+      rankRounds(wed, WeightedShare, everywhere(TeleportMicros))(
+        rankStart(wed, everywhere(RankOne)), 3)
     }.orderBy(col("node_id"))
 
   lazy val g15Sql: String = {
@@ -1092,73 +1075,43 @@ object GraphOps {
     g14Probe(spark, dir)._1.orderBy(col("node_id"))
 
   // ---- g13: personalized PageRank (teleport to a source set) ----
-  // Random-walk-with-restart relevance scores relative to an arbitrary
-  // source set: the teleport term lands ONLY on sources — the uniform
-  // base of g5 becomes source-conditional, everything else (integer
-  // micro-unit map, E-row shuffle per round, deterministic DIV
-  // arithmetic) is identical, so the oracle is the same unrolled CTE
-  // chain with a CASE base.
-  /** Generic operator: `isSource` is a Boolean expression over the
-    * node-id column — membership costs one predicate inside the
-    * round's aggregate projection, never a join. A one-node predicate
-    * is single-source random-walk-with-restart
-    * (PersonalizedPagerankSpec pins it against an in-memory model). */
-  def personalizedPagerank(spark: SparkSession, dir: String,
-      isSource: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      iters: Int = 3): DataFrame = {
-    val ew = edgesWithDeg(spark, dir)
-    def base(n: org.apache.spark.sql.Column) =
-      when(isSource(n), lit(150000L)).otherwise(lit(0L))
-    var r = ew.select(col("src").as("node")).distinct()
-      .select(col("node"),
-        when(isSource(col("node")), lit(1000000L)).otherwise(lit(0L)).as("r"))
-    for (_ <- 1 to iters) {
-      r = ew
-        .join(r, col("src") === col("node"))
-        .select(col("dst"), expr("r DIV d").as("contrib"))
-        .groupBy(col("dst").as("node"))
-        .agg((base(col("dst")) + expr("85 * sum(contrib) DIV 100")).as("r"))
-    }
-    r.select(col("node").as("node_id"), col("r").as("rank"))
-  }
+  // Random-walk-with-restart scores relative to the region tag
+  // (node % 8 = 5, the 5 region nodes): the uniform teleport of g5
+  // lands only on sources, so the oracle is g5's unrolled CTE chain
+  // with a CASE base.
+  private def regionTag(n: Column): Column = n % 8 === 5
 
   /** Source set given as a DataFrame of `node_id` (the shape users
     * hand us when membership isn't expressible as a predicate): the
     * set is broadcast and the teleport term becomes a broadcast
-    * left-join null-check per round — still no shuffle of the rank
-    * vector beyond the round's own aggregate. Source sets are
-    * relevance anchors (a query's seed pages, a user's history), so
-    * broadcast-sized by construction. */
+    * left-join null-check after each zero-teleport round — still no
+    * shuffle of the rank vector beyond the round's own aggregate.
+    * Source sets are relevance anchors (a query's seed pages, a
+    * user's history), so broadcast-sized by construction. */
   def personalizedPagerankFrom(spark: SparkSession, dir: String,
       sources: DataFrame, iters: Int = 3): DataFrame = {
     val src = broadcast(sources.select(col("node_id").as("snode")).distinct())
     val ew = edgesWithDeg(spark, dir)
-    var r = ew.select(col("src").as("node")).distinct()
-      .join(src, col("node") === col("snode"), "left")
-      .select(col("node"),
-        when(col("snode").isNotNull, lit(1000000L)).otherwise(lit(0L)).as("r"))
-    for (_ <- 1 to iters) {
-      r = ew
-        .join(r, col("src") === col("node"))
-        .select(col("dst"), expr("r DIV d").as("contrib"))
-        .groupBy(col("dst").as("node"))
-        .agg(expr("85 * sum(contrib) DIV 100").as("walk"))
-        .join(src, col("node") === col("snode"), "left")
-        .select(col("node"),
-          (when(col("snode").isNotNull, lit(150000L)).otherwise(lit(0L))
-            + col("walk")).as("r"))
-    }
-    r.select(col("node").as("node_id"), col("r").as("rank"))
+    def plusSources(v: DataFrame, micros: Long): DataFrame = v
+      .join(src, col("node_id") === col("snode"), "left")
+      .select(col("node_id"),
+        (when(col("snode").isNotNull, lit(micros)).otherwise(lit(0L))
+          + col("rank")).as("rank"))
+    var r = plusSources(rankStart(ew, everywhere(0L)), RankOne)
+    for (_ <- 1 to iters)
+      r = plusSources(rankRounds(ew, UniformShare, everywhere(0L))(r, 1), TeleportMicros)
+    r
   }
 
-  /** The driver-gated instance: sources = the id-namespace tag
-    * (node % 8 = 5, the 5 region nodes). DfCache'd like g5 so
-    * repeated invocations reuse the converged vector instead of
-    * re-running the 3 rounds (the round-3 verdict's g13-vs-g5 bench
-    * gap was exactly this missing cache). */
+  /** The driver-gated instance. DfCache'd like g5 so repeated
+    * invocations reuse the converged vector instead of re-running the
+    * 3 rounds (the round-3 verdict's g13-vs-g5 bench gap was exactly
+    * this missing cache). */
   def g13PersonalizedPagerank(spark: SparkSession, dir: String): DataFrame =
     graft.util.DfCache.cached(spark, dir, "graph_ppr_tag5") {
-      personalizedPagerank(spark, dir, n => n % 8 === 5)
+      val ew = edgesWithDeg(spark, dir)
+      rankRounds(ew, UniformShare, onSources(regionTag, TeleportMicros))(
+        rankStart(ew, onSources(regionTag, RankOne)), 3)
     }.orderBy(col("node_id"))
 
   lazy val g13Sql: String = {
@@ -1178,65 +1131,15 @@ object GraphOps {
   }
 
   // ---- g16: WEIGHTED personalized PageRank ----
-  // The last uncomposed corner of the rank family: g13's source-
-  // conditional teleport over g15's weight-proportional rounds. The
-  // composition is literal — base(dst) from g13, contrib = r·w DIV
-  // wsum from g15 — and both parents' invariants pin it: with unit
-  // weights (w=1, wsum=deg) the round map reduces to g13's exactly
+  // g13's region teleport over g15's weighted shares. With unit
+  // weights (w=1, wsum=deg) the map reduces to g13's exactly
   // (r·1 DIV d = r DIV d), asserted bit-exact by
-  // PersonalizedPagerankSpec. Same scale posture as both parents:
-  // loop-invariant cached src-partitioned edge table, one V-row
-  // shuffle per round, teleport membership is a predicate in the
-  // aggregate projection — never a join.
-  /** Weighted personalized rounds from `start` (node_id, rank) over
-    * any (src, dst, w, wsum) edge table — the composable core. */
-  def weightedPersonalizedFrom(wed: DataFrame,
-      isSource: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      start: DataFrame, iters: Int): DataFrame = {
-    def base(n: org.apache.spark.sql.Column) =
-      when(isSource(n), lit(150000L)).otherwise(lit(0L))
-    var r = start.select(col("node_id").as("node"), col("rank").as("r"))
-    for (_ <- 1 to iters) {
-      r = wed
-        .join(r, col("src") === col("node"))
-        .select(col("dst"), expr("(r * w) DIV wsum").as("contrib"))
-        .groupBy(col("dst").as("node"))
-        .agg((base(col("dst")) + expr("85 * sum(contrib) DIV 100")).as("r"))
-    }
-    r.select(col("node").as("node_id"), col("r").as("rank"))
-  }
-
-  /** Personalized start vector (teleport mass on sources only) over
-    * an edge table's vertex set. */
-  private[graft] def personalizedStart(edges: DataFrame,
-      isSource: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame =
-    edges.select(col("src").as("node_id")).distinct()
-      .select(col("node_id"),
-        when(isSource(col("node_id")), lit(1000000L)).otherwise(lit(0L)).as("rank"))
-
-  /** g14's relative stop rule over the weighted personalized rounds —
-    * with this, every (weighted × personalized) combination runs
-    * through the one [[rankLoopUntilStop]] machinery. */
-  def weightedPersonalizedUntilRelDelta(spark: SparkSession, dir: String,
-      isSource: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      relPpm: Long, maxIters: Int = 200, minIters: Int = 1): (DataFrame, Int) = {
-    val wed = GraphTables.weightedEdges(spark, dir)
-    rankLoopUntilStop(personalizedStart(wed, isSource),
-      r => weightedPersonalizedFrom(wed, isSource, r, 1),
-      maxIters, minIters,
-      (mxDelta, mxRank) =>
-        BigInt(mxDelta) * 1000000 <= BigInt(relPpm) * BigInt(mxRank),
-      s"weighted personalized relative |delta| <= $relPpm ppm",
-      graft.util.Loops.memoRows(wed))
-  }
-
-  /** The driver-gated instance: same tag source set as g13 (node % 8
-    * = 5), 3 weighted rounds, DfCache'd like its parents. */
+  // PersonalizedPagerankSpec.
   def g16WeightedPersonalized(spark: SparkSession, dir: String): DataFrame =
     graft.util.DfCache.cached(spark, dir, "graph_wppr_tag5") {
       val wed = GraphTables.weightedEdges(spark, dir)
-      weightedPersonalizedFrom(wed, n => n % 8 === 5,
-        personalizedStart(wed, n => n % 8 === 5), 3)
+      rankRounds(wed, WeightedShare, onSources(regionTag, TeleportMicros))(
+        rankStart(wed, onSources(regionTag, RankOne)), 3)
     }.orderBy(col("node_id"))
 
   lazy val g16Sql: String = {

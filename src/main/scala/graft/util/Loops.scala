@@ -15,7 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the single job that materializes the round). Measured on the g12
   * loop at sf0.1 (min of 3 interleaved reps): 8 rounds 6.38 s with AQE
   * vs 4.78 s without, and 3.88 s without AQE plus the fused stop-check
-  * (LoopProbe, guide §1).
+  * (guide §1).
   *
   * Everything OUTSIDE loop rounds keeps AQE (skew-join splits on the
   * big self-joins are pure win). What a loop ROUND loses without AQE

@@ -46,6 +46,19 @@ class BenchArtifactSpec extends AnyFunSuite {
       === "bench_wire_degraded.json")
   }
 
+  test("a late contention window quarantines the run despite a clean board median") {
+    // 40 clean slots then a 20-slot window at 1.5×: the whole-board
+    // median stays 1.0, but the end canary and the tail half both fail
+    val late = Seq.fill(40)(1.0) ++ Seq.fill(20)(1.5)
+    assert(Bench.hostDegraded(canaryStart = 1.0, canaryEnd = 1.5,
+      material = late, stealPct = 0.5))
+    // the r13 case still stands: a noisy canary with a clean end pass,
+    // or with a clean board tail, is outvoted by a clean board
+    val clean = Seq.fill(60)(1.0)
+    assert(!Bench.hostDegraded(5.84, 1.0, clean, 0.44))
+    assert(!Bench.hostDegraded(1.0, 1.5, clean, 0.44))
+  }
+
   private def assertCleanClose(path: String): Unit = {
     val f = new java.io.File(path)
     if (f.exists()) { // absent is fine (fresh checkout pre-close)

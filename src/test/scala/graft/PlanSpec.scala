@@ -68,9 +68,50 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("g5: pagerank iterations reuse the cached edge table") {
-    val plan = planOf(SparkEntry.queries("g5_pagerank")(spark, dir))
-    assert(plan.contains("InMemoryTableScan") || plan.contains("TableCacheQueryStage"),
-      "loop-invariant edge+degree table must come from cache")
+    // one uncached rank round over each edge table: the edge side is
+    // read from cache in its src layout and never reshuffled — only
+    // the V-row vector moves. Walking up from a cache scan through
+    // row-wise operators, the first operator that regroups rows must
+    // not be an Exchange.
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter,
+      ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.operators.graph.{GraphOps, GraphTables}
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case _ => p.children
+    }
+    def rowWise(p: SparkPlan): Boolean = p match {
+      case _: AdaptiveSparkPlanExec | _: QueryStageExec | _: InputAdapter |
+          _: WholeStageCodegenExec | _: ColumnarToRowExec | _: FilterExec |
+          _: ProjectExec => true
+      case _ => false
+    }
+    // (cache scan, first regrouping operator above it)
+    def scans(p: SparkPlan, above: Option[SparkPlan]): Seq[(InMemoryTableScanExec, Option[SparkPlan])] =
+      p match {
+        case s: InMemoryTableScanExec => Seq((s, above))
+        case _ => kids(p).flatMap(scans(_, if (rowWise(p)) above else Some(p)))
+      }
+    for ((edges, share) <- Seq(
+        GraphOps.edgesWithDeg(spark, dir) -> GraphOps.UniformShare,
+        GraphTables.weightedEdges(spark, dir) -> GraphOps.WeightedShare)) {
+      val round = GraphOps.rankRounds(edges, share,
+        GraphOps.everywhere(GraphOps.TeleportMicros))(
+        GraphOps.rankStart(edges, GraphOps.everywhere(GraphOps.RankOne)), 1)
+      round.collect()
+      val found = scans(round.queryExecution.executedPlan, None)
+      val plan = round.queryExecution.executedPlan.toString
+      assert(found.exists(_._1.output.exists(_.name == "dst")),
+        s"the round must read the edge list from cache:\n$plan")
+      found.foreach { case (_, above) =>
+        assert(!above.exists(_.isInstanceOf[Exchange]),
+          s"the cached edge list must not be reshuffled:\n$plan")
+      }
+    }
   }
 
   test("s1: brute-force kNN broadcasts the query set over the corpus scan") {

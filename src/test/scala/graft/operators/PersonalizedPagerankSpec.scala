@@ -2,6 +2,7 @@ package graft.operators
 
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 import graft.GraftSession
 import graft.operators.graph.GraphOps
@@ -45,19 +46,27 @@ class PersonalizedPagerankSpec extends AnyFunSuite with BeforeAndAfterAll {
     r
   }
 
+  /** `iters` personalized rounds over `edges` from the source-set start. */
+  private def personalized(edges: DataFrame, share: Column,
+      isSource: Column => Column, iters: Int = 3): DataFrame =
+    GraphOps.rankRounds(edges, share, GraphOps.onSources(isSource, GraphOps.TeleportMicros))(
+      GraphOps.rankStart(edges, GraphOps.onSources(isSource, GraphOps.RankOne)), iters)
+  private def ew = GraphOps.edgesWithDeg(spark, dir)
+  private def wed = graft.operators.graph.GraphTables.weightedEdges(spark, dir)
+
   private lazy val edges: Seq[(Long, Long, Long)] =
     GraphOps.edgesWithDeg(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
 
   test("one-node source set == single-source RWR (in-memory integer model)") {
     val s0 = edges.map(_._1).min
-    val got = rows(GraphOps.personalizedPagerank(spark, dir, _ === s0, iters = 3))
+    val got = rows(personalized(ew, GraphOps.UniformShare, _ === s0, iters = 3))
     val want = model(edges, _ == s0, iters = 3).toSeq.sortBy(identity)
     assert(got == want)
   }
 
   test("tag-predicate source set matches the in-memory model too") {
-    val got = rows(GraphOps.personalizedPagerank(spark, dir, n => n % 8 === 5))
+    val got = rows(personalized(ew, GraphOps.UniformShare, n => n % 8 === 5))
     val want = model(edges, _ % 8 == 5, iters = 3).toSeq.sortBy(identity)
     assert(got == want)
   }
@@ -67,18 +76,18 @@ class PersonalizedPagerankSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("src").as("node_id")).distinct()
       .filter(col("node_id") % 8 === 5)
     val viaDf = rows(GraphOps.personalizedPagerankFrom(spark, dir, srcDf))
-    val viaPred = rows(GraphOps.personalizedPagerank(spark, dir, n => n % 8 === 5))
+    val viaPred = rows(personalized(ew, GraphOps.UniformShare, n => n % 8 === 5))
     assert(viaDf == viaPred)
   }
 
   test("gated g13 instance == generic core with the tag predicate") {
     val gated = rows(GraphOps.g13PersonalizedPagerank(spark, dir))
-    val generic = rows(GraphOps.personalizedPagerank(spark, dir, n => n % 8 === 5))
+    val generic = rows(personalized(ew, GraphOps.UniformShare, n => n % 8 === 5))
     assert(gated == generic)
   }
 
   test("empty source set: every rank is exactly zero (no teleport mass)") {
-    val got = rows(GraphOps.personalizedPagerank(spark, dir, _ => org.apache.spark.sql.functions.lit(false)))
+    val got = rows(personalized(ew, GraphOps.UniformShare, _ => org.apache.spark.sql.functions.lit(false)))
     assert(got.nonEmpty && got.forall(_._2 == 0L))
   }
 
@@ -87,22 +96,18 @@ class PersonalizedPagerankSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("g16 with unit weights == unweighted personalized (g13 core), bit-exact") {
     // w=1, wsum=deg makes the weighted round map r·1 DIV d = r DIV d —
     // the composition must collapse to g13's operator exactly
-    val ew = GraphOps.edgesWithDeg(spark, dir)
     val unitWed = ew.select(col("src"), col("dst"),
       org.apache.spark.sql.functions.lit(1L).as("w"), col("d").as("wsum"))
-    val isSource = (n: org.apache.spark.sql.Column) => n % 8 === 5
-    val weighted = rows(GraphOps.weightedPersonalizedFrom(unitWed, isSource,
-      GraphOps.personalizedStart(unitWed, isSource), 3))
-    val unweighted = rows(GraphOps.personalizedPagerank(spark, dir, isSource, 3))
+    val isSource = (n: Column) => n % 8 === 5
+    val weighted = rows(personalized(unitWed, GraphOps.WeightedShare, isSource, 3))
+    val unweighted = rows(personalized(ew, GraphOps.UniformShare, isSource, 3))
     assert(weighted == unweighted)
   }
 
   test("gated g16 == composable core over the weighted edge table") {
-    val wed = graft.operators.graph.GraphTables.weightedEdges(spark, dir)
-    val isSource = (n: org.apache.spark.sql.Column) => n % 8 === 5
+    val isSource = (n: Column) => n % 8 === 5
     val gated = rows(GraphOps.g16WeightedPersonalized(spark, dir))
-    val generic = rows(GraphOps.weightedPersonalizedFrom(wed, isSource,
-      GraphOps.personalizedStart(wed, isSource), 3))
+    val generic = rows(personalized(wed, GraphOps.WeightedShare, isSource, 3))
     assert(gated == generic)
   }
 
@@ -110,12 +115,13 @@ class PersonalizedPagerankSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the rankLoopUntilStop composition obeys the same loop ≡ unroll
     // law as g12/g14 (GraphWarmStartSpec's pattern): the converged
     // vector is bit-exactly k fixed rounds for the returned k
-    val isSource = (n: org.apache.spark.sql.Column) => n % 8 === 5
-    val (df, k) = GraphOps.weightedPersonalizedUntilRelDelta(
-      spark, dir, isSource, relPpm = 200000L, minIters = 4)
-    val wed = graft.operators.graph.GraphTables.weightedEdges(spark, dir)
-    val unrolled = rows(GraphOps.weightedPersonalizedFrom(wed, isSource,
-      GraphOps.personalizedStart(wed, isSource), k))
+    val isSource = (n: Column) => n % 8 === 5
+    val (df, k) = GraphOps.rankLoopUntilStop(
+      GraphOps.rankStart(wed, GraphOps.onSources(isSource, GraphOps.RankOne)),
+      GraphOps.rankRounds(wed, GraphOps.WeightedShare,
+        GraphOps.onSources(isSource, GraphOps.TeleportMicros))(_, 1),
+      GraphOps.relativeStop(200000L), maxIters = 200, minIters = 4)
+    val unrolled = rows(personalized(wed, GraphOps.WeightedShare, isSource, k))
     assert(k >= 4 && rows(df) == unrolled)
   }
 }

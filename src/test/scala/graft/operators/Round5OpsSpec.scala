@@ -164,6 +164,10 @@ class Round5OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  private def weightedRounds(wed: org.apache.spark.sql.DataFrame) =
+    GraphOps.rankRounds(wed, GraphOps.WeightedShare,
+      GraphOps.everywhere(GraphOps.TeleportMicros)) _
+
   test("g15: unit weights reduce weighted pagerank to the unweighted one, bit-exact") {
     // w ≡ 1 ⇒ wsum = deg ⇒ contrib = r DIV deg — the weighted round
     // must degenerate to g5's exactly
@@ -172,7 +176,7 @@ class Round5OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val unit = sym.join(deg, col("src") === col("wnode"))
       .select(col("src"), col("dst"), lit(1L).as("w"), col("wsum"))
     val start = GraphOps.uniformRanks(spark, dir)
-    val a = GraphOps.weightedPagerankFrom(unit, start, 3)
+    val a = weightedRounds(unit)(start, 3)
       .orderBy(col("node_id")).collect().toSeq
     val b = GraphOps.pagerankFrom(spark, dir, start, 3)
       .orderBy(col("node_id")).collect().toSeq
@@ -187,7 +191,7 @@ class Round5OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("src", "dst", "w", "wsum")
     val start = Seq((1L, 1000000L), (2L, 1000000L), (3L, 1000000L))
       .toDF("node_id", "rank")
-    val r = GraphOps.weightedPagerankFrom(wed, start, 3)
+    val r = weightedRounds(wed)(start, 3)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r(3L) > r(1L), s"heavier in-edge must yield higher rank: $r")
   }
@@ -207,13 +211,12 @@ class Round5OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("weighted relative-tolerance loop equals the same number of fixed weighted rounds") {
-    val (v, n) = GraphOps.weightedPagerankUntilRelDelta(spark, dir,
-      relPpm = 200000L, minIters = 4)
-    assert(n >= 4)
     val wed = graft.operators.graph.GraphTables.weightedEdges(spark, dir)
-    val start = wed.select(col("src").as("node_id")).distinct()
-      .select(col("node_id"), lit(1000000L).as("rank"))
-    val fixed = GraphOps.weightedPagerankFrom(wed, start, n)
+    val start = GraphOps.rankStart(wed, GraphOps.everywhere(GraphOps.RankOne))
+    val (v, n) = GraphOps.rankLoopUntilStop(start, weightedRounds(wed)(_, 1),
+      GraphOps.relativeStop(200000L), maxIters = 200, minIters = 4)
+    assert(n >= 4)
+    val fixed = weightedRounds(wed)(start, n)
     assert(v.orderBy(col("node_id")).collect().toSeq ==
       fixed.orderBy(col("node_id")).collect().toSeq)
   }
