@@ -152,8 +152,8 @@ object ScaleTrail {
       def unreached(edges: org.apache.spark.sql.DataFrame): Long = {
         val seed = scc.select(col("node"),
           when(col("node") === col("scc"), lit(0L)).otherwise(lit(1L)).as("lbl"))
-        GraphOps.minLabelFrontier(edges, seed,
-            seed.filter(col("lbl") === 0L), 200)
+        GraphOps.minLabelFixpoint(edges, seed, seedIf = col("lbl") === 0L,
+            maxIters = 200, mustConverge = true)
           .filter(col("lbl") =!= 0L).count()
       }
       val fwdMiss = unreached(intra)

@@ -588,19 +588,24 @@ object DedupOps {
   // The output a dedup pipeline actually acts on: connected components
   // over the Jaccard-verified candidate-pair graph (d4's edges), each
   // doc labeled with its cluster id (= min doc_id of the cluster) and
-  // a keep/drop flag. Runs the same synchronous min-label fixpoint as
-  // g11 (per-round localCheckpoint, V-row label shuffles); dup
-  // clusters have tiny diameter, so it converges in a handful of
-  // rounds regardless of corpus size. Only docs that appear in some
-  // near-dup pair are emitted — singletons are implicitly kept.
-  def d6DupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = d4NgramJaccard(spark, dir).select(col("doc_a"), col("doc_b"))
+  // a keep/drop flag, by `pairClusters`; dup clusters have tiny
+  // diameter, so it converges in a handful of rounds regardless of
+  // corpus size. Only docs that appear in some near-dup pair are
+  // emitted — singletons are implicitly kept.
+  def d6DupClusters(spark: SparkSession, dir: String): DataFrame =
+    pairClusters(d4NgramJaccard(spark, dir))
+
+  /** Keep/drop decisions over a (doc_a, doc_b) pair table: connected
+    * components of the symmetric pair graph by the shared min-label
+    * fixpoint (one clustering machinery for every pair generator),
+    * cluster_id = min doc_id, keep-min. Emits only docs in some pair. */
+  private def pairClusters(pairs: DataFrame): DataFrame = {
     val sym = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     val start = sym.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
     graft.operators.graph.GraphOps
-      .minLabelFixpoint(sym, start, maxIters = 50, untilConverged = true)
+      .minLabelFixpoint(sym, start, maxIters = 50, mustConverge = true)
       .select(col("node").as("doc_id"), col("lbl").as("cluster_id"),
         (col("node") === col("lbl")).as("is_kept"))
       .orderBy(col("doc_id"))
@@ -1337,25 +1342,12 @@ object DedupOps {
   // ---- d16: dup clusters over the winnowed-fingerprint pair graph ----
   // Closes the winnow family the way d6 closes the Jaccard family:
   // d15's containment-scored pairs become keep/drop decisions via the
-  // SAME shared min-label fixpoint (one clustering machinery for
-  // every pair generator — a new candidate family needs only edges).
+  // same `pairClusters` (a new candidate family needs only edges).
   // Only pairs with containment ≥ 1/2 (≥ 500000 ppm — half of the
   // smaller doc's fingerprints shared) edge the graph, the d4-theta
   // analog for fingerprint space. Cluster id = min doc_id; keep-min.
-  def d16WinnowClusters(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = d15WinnowDup(spark, dir)
-      .filter(col("containment_ppm") >= 500000)
-      .select(col("doc_a"), col("doc_b"))
-    val sym = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    val start = sym.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-    graft.operators.graph.GraphOps
-      .minLabelFixpoint(sym, start, maxIters = 50, untilConverged = true)
-      .select(col("node").as("doc_id"), col("lbl").as("cluster_id"),
-        (col("node") === col("lbl")).as("is_kept"))
-      .orderBy(col("doc_id"))
-  }
+  def d16WinnowClusters(spark: SparkSession, dir: String): DataFrame =
+    pairClusters(d15WinnowDup(spark, dir).filter(col("containment_ppm") >= 500000))
 
   lazy val d16Sql: String =
     s"""WITH wp AS ($d15Sql),

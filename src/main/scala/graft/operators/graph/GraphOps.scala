@@ -441,7 +441,7 @@ object GraphOps {
     * logical plan nests every earlier one, Catalyst analysis grows
     * ~2^h, and the driver burned ~40 s planning g27's hop 6 at sf0.1.
     * Round-10 notes on g40's sweep (the paths not taken): a composed
-    * stride-2 lazy block (the minLabelFixpoint trick) measured 38 s vs
+    * two-hop lazy block (one checkpoint per two hops) measured 38 s vs
     * ~11 s (AQE re-plans each reference to the intra-block level as its
     * own exchange and re-ran the expansion 3×), and AQE partition
     * coalescing measured 29–52 s (the fat middle hop collapsed to ~1
@@ -1566,90 +1566,76 @@ object GraphOps {
   // round-trip preserves content exactly → same oracle as g5
   lazy val g9Sql: String = g5Sql
 
-  // ---- g10: connected components via min-label propagation ----
-  // 3 synchronous rounds of l_{t+1}(v) = min(l_t(v), min_{u∈N(v)} l_t(u))
-  // starting from l_0 = node id. Fixed iteration count keeps the
-  // oracle exact (unrolled CTEs); the per-round plan re-uses the
-  // cached src-partitioning of the edge list (the label vector is the
-  // only thing that shuffles — V rows/round, same AnalysisRound shape
-  // as pagerank). At convergence labels are component minima; 3 rounds
-  // is the label frontier at radius 3, exactly as the oracle defines.
-  //
-  // Each round references the previous label vector TWICE (once in the
-  // union, once through the neighbor join). Without materializing it,
-  // the unpersisted subtree doubles per round — 2^iters recomputes of
-  // round 0 by the last round (this was g10's unexplained 58s in the
-  // round-1 bench). Persisting the V-row vector each round makes every
-  // round compute exactly once; the handle is dropped after the next
-  // round is materialized.
-  /** Synchronous min-label propagation over a symmetric (src, dst)
-    * edge table, starting from `start` (node, lbl). Generic: g10/g11
-    * run it on the derived graph, dedup's cluster assignment (d6) on
-    * the candidate-pair graph. */
-  def minLabelFixpoint(sym: DataFrame, start: DataFrame,
-      maxIters: Int, untilConverged: Boolean,
-      stride: Int = 1): DataFrame =
-    graft.util.Loops.quiet(sym.sparkSession, graft.util.Loops.memoRows(sym)) {
-    var labels = start.persist(StorageLevel.MEMORY_AND_DISK)
+  // ---- the min-relaxation fixpoint (g10/g11/g36/g43, g44, g45, d6, d16) ----
+  /** The engine's one min-plus `AnalysisRound`: every node keeps the
+    * smallest value offered by itself or an in-neighbour. Per round
+    * only the FRONTIER joins the edges, each edge offering `hop` (over
+    * the frontier's `lbl` and the edge's columns, e.g. `lbl + cost`)
+    * to its `dst`:
+    *   labels' = min over labels(own) ∪ (edges ⋈ frontier).select(dst, hop)
+    *   frontier' = nodes with no previous value, or a smaller one.
+    * This equals the synchronous round (every node offers every round)
+    * at every k, node set included: a node off the frontier holds the
+    * value it already offered its out-neighbours a round earlier, so
+    * offering it again lowers nothing. A node first reached as a `dst`
+    * has no previous value and propagates from the next round on.
+    * `seedIf` picks the first frontier out of `start`; leave out only
+    * nodes whose offers cannot lower anything (the SCC mark phase
+    * seeds its 0-labelled pivots).
+    *
+    * `start` is (node, lbl), one row per node; `edges` has `src`,
+    * `dst` and what `hop` reads, but no `node` or `lbl`. Returns
+    * (node, lbl) after `maxIters` rounds or after the first round that
+    * changes nothing, whichever comes first; with `mustConverge`,
+    * running out of rounds throws instead (a silently unconverged
+    * vector would hand wrong components or distances downstream). The
+    * round count is the synchronous one, which the unrolled oracle
+    * horizons rely on. `loopRows` is the per-round row estimate for
+    * [[graft.util.Loops.quiet]]; negative counts `edges` once.
+    *
+    * One job per round: each round is localCheckpoint'ed lazily and
+    * the frontier probe is the action that materializes it, so the
+    * next round's two references (union and join) read stored
+    * partitions and the plan does not grow with rounds. When the
+    * limit(1) probe short-circuits, the partitions it skipped are
+    * filled in by Spark's LocalRDDCheckpointData missing-partition
+    * job, and the next round depends on that: swapping the probe for
+    * isEmpty or changing the storage level must not assume the probe
+    * materialized every partition. */
+  def minLabelFixpoint(edges: DataFrame, start: DataFrame,
+      hop: Column = col("lbl"), seedIf: Column = lit(true),
+      maxIters: Int, mustConverge: Boolean,
+      loopRows: => Long = -1L): DataFrame =
+    graft.util.Loops.quiet(edges.sparkSession,
+        { val n = loopRows; if (n >= 0L) n else graft.util.Loops.memoRows(edges) }) {
+    var labels = start.localCheckpoint(false)
+    var frontier = labels.filter(seedIf)
     var it = 0
     var done = false
-    // one propagation step; keepPrev threads the input label through
-    // for the convergence check
-    def step(lbls: DataFrame, keepPrev: Boolean): DataFrame = {
-      val rest: Seq[Column] =
-        if (keepPrev) Seq(min(when(col("own"), col("lbl"))).as("prev"))
-        else Seq.empty
-      lbls.select(col("node"), col("lbl"), lit(true).as("own"))
-        .union(sym.join(lbls, col("src") === col("node"))
-          .select(col("dst").as("node"), col("lbl"), lit(false).as("own")))
-        .groupBy(col("node"))
-        .agg(min(col("lbl")).as("lbl"), rest: _*)
-    }
     while (it < maxIters && !done) {
-      // `stride` composed steps per materialization: min propagation
-      // is monotone, so "the LAST step changed nothing" certifies the
-      // fixpoint regardless of what the earlier composed steps did —
-      // one localCheckpoint + one convergence scan buys stride hops.
-      // Each node appears exactly ONCE in `labels`, so the previous
-      // label rides through the aggregate (min over the own-tagged
-      // row) — convergence detection costs a narrow filter over the
-      // materialized round instead of a V⋈V join per round.
-      // localCheckpoint (eager): materializes the round AND cuts the
-      // lineage, so a convergence loop's plan doesn't grow with rounds.
-      var cur = labels
-      for (_ <- 1 until stride)
-        cur = step(cur, keepPrev = false).select(col("node"), col("lbl"))
-      // Convergence rounds: ONE job per round (optimization r13) — the
-      // round is localCheckpoint'ed lazily and the convergence count is
-      // the action that materializes it (each partition is stored as it
-      // is computed, so the previous round's double reference still
-      // resolves against materialized storage). NOTE (r13 advisor):
-      // when the limit(1) probe short-circuits, partitions it never
-      // computed are filled in by Spark's LocalRDDCheckpointData
-      // missing-partition job — an extra job that round, and the thing
-      // the next round's double reference silently depends on. A
-      // refactor swapping limit(1).count for isEmpty or changing the
-      // storage level must NOT assume the probe job materialized
-      // everything. Fixed-round mode keeps
-      // the eager checkpoint: with no per-round action a lazy chain
-      // would leave each round's DOUBLE consumer (union + join) racing
-      // to compute unmaterialized parents inside the one final job.
-      val next = step(cur, keepPrev = true).localCheckpoint(untilConverged == false)
-      if (untilConverged) {
-        done = next.filter(col("lbl") < col("prev")).limit(1).count() == 0L
-      }
-      labels.unpersist()
+      val next = labels.select(col("node"), col("lbl"), lit(true).as("own"))
+        .union(edges.join(frontier, col("src") === col("node"))
+          .select(col("dst").as("node"), hop.as("lbl"), lit(false).as("own")))
+        .groupBy(col("node"))
+        .agg(min(col("lbl")).as("lbl"), min(when(col("own"), col("lbl"))).as("prev"))
+        .localCheckpoint(false)
+      frontier = next.filter(col("prev").isNull || col("lbl") < col("prev"))
+        .select(col("node"), col("lbl"))
+      done = frontier.limit(1).count() == 0L
       labels = next.select(col("node"), col("lbl"))
       it += 1
     }
-    if (untilConverged && !done) {
-      // fail loudly: a silently-unconverged label vector would hand
-      // wrong keep/drop or component decisions downstream
-      throw new IllegalStateException(
-        s"min-label propagation did not converge within $maxIters rounds")
-    }
+    if (mustConverge && !done) throw new IllegalStateException(
+      s"min-label relaxation did not converge within $maxIters rounds")
     labels
   }
+
+  // ---- g10: connected components via min-label propagation ----
+  // 3 rounds of l_{t+1}(v) = min(l_t(v), min_{u∈N(v)} l_t(u)) starting
+  // from l_0 = node id. The fixed round count keeps the oracle exact
+  // (unrolled CTEs); at convergence labels are component minima, and
+  // 3 rounds is the label frontier at radius 3, exactly as the oracle
+  // defines it.
 
   private def initialLabels(spark: SparkSession, dir: String): DataFrame =
     withSym(spark, dir).select(col("src").as("node")).distinct()
@@ -1657,7 +1643,7 @@ object GraphOps {
 
   def g10Components(spark: SparkSession, dir: String, iters: Int = 3): DataFrame =
     minLabelFixpoint(withSym(spark, dir), initialLabels(spark, dir),
-        iters, untilConverged = false)
+        maxIters = iters, mustConverge = false)
       .select(col("node").as("node_id"), col("lbl").as("component"))
       .orderBy(col("node_id"))
 
@@ -1667,8 +1653,8 @@ object GraphOps {
     * (node_id, component) — the AnalysisRound resume. The checkpoint
     * may be from a SMALLER graph: nodes that have appeared since
     * (re)start from their own id (left join + coalesce), so every
-    * current node owns exactly one label row — the invariant both the
-    * aggregate-carried convergence check and correctness depend on. */
+    * current node owns exactly one label row, as `minLabelFixpoint`
+    * requires of its `start`. */
   def componentsConverged(spark: SparkSession, dir: String,
       resumeFrom: Option[DataFrame] = None, maxIters: Int = 100): DataFrame = {
     val start = resumeFrom match {
@@ -1679,7 +1665,8 @@ object GraphOps {
           .select(col("node"), coalesce(col("rlbl"), col("lbl")).as("lbl"))
       case None => initialLabels(spark, dir)
     }
-    minLabelFixpoint(withSym(spark, dir), start, maxIters, untilConverged = true)
+    minLabelFixpoint(withSym(spark, dir), start,
+        maxIters = maxIters, mustConverge = true)
       .select(col("node").as("node_id"), col("lbl").as("component"))
       .orderBy(col("node_id"))
   }
@@ -1812,17 +1799,16 @@ object GraphOps {
   // units, so a supplier shipping a part 50× sits 50× "closer" than
   // a one-off. g6's hop-count BFS answers "reachable in k"; this
   // answers the weighted version every routing/affinity query needs.
-  // Per round the V-row distance vector joins the src-partitioned
-  // weighted edge layout (only the vector shuffles), min-combines
-  // with its own previous row (the minLabelFixpoint "own" trick —
-  // convergence is a narrow filter, no V⋈V diff join), and
-  // localCheckpoints so the plan doesn't grow with rounds. Rounds =
-  // weighted-path hop radius from the seed; raises past SsspUnroll
-  // (the g14 convention) because the oracle unrolls exactly that
-  // horizon — relaxation is monotone with one fixpoint, so a Spark
-  // convergence at round k ≤ SsspUnroll proves the oracle's unroll
-  // is also converged. Seed = min node id (the g40 anchor
-  // convention). All-integer distances: exact at any scale.
+  // It is `minLabelFixpoint` with hop = lbl + cost: only nodes whose
+  // distance improved last round probe the src-partitioned weighted
+  // edges, so per-round edge volume is edges-incident-to-frontier,
+  // not all E. Rounds = weighted-path hop radius from the seed;
+  // raises past SsspUnroll (the g14 convention) because the oracle
+  // unrolls exactly that horizon (raise both together) — relaxation
+  // is monotone with one fixpoint, so a Spark convergence at round
+  // k ≤ SsspUnroll proves the oracle's unroll is also converged.
+  // Seed = min node id (the g40 anchor convention). All-integer
+  // distances: exact at any scale.
   private val SsspUnroll = 16
 
   /** The SSSP cost layout — multiplicity-weighted edges with the
@@ -1835,51 +1821,14 @@ object GraphOps {
 
   def g44WeightedSssp(spark: SparkSession, dir: String): DataFrame = {
     val we = ssspCostEdges(spark, dir)
-    graft.util.Loops.quiet(spark,
-      graft.util.Loops.memoRows(GraphTables.weightedEdges(spark, dir))) {
     val seed = we.agg(min(col("src")).as("node"))
-      .select(col("node"), lit(0L).as("dist"))
-    // Frontier-based relaxation (the delta optimization): a settled
-    // node whose distance did not change this round has already
-    // propagated everything it ever will, so only the IMPROVED set
-    // joins the edges next round. Per-round edge volume is then
-    // edges-incident-to-frontier, not all E — the same wavefront
-    // shape the BFS operators use, and the difference between O(E)
-    // and O(E·rounds) total work on high-diameter graphs.
-    var dists = seed.localCheckpoint(true)
-    var frontier = dists
-    var it = 0
-    var done = false
-    while (it < SsspUnroll && !done) {
-      val relaxed = we.join(frontier, col("src") === col("node"))
-        .select(col("dst").as("node"), (col("dist") + col("cost")).as("dist"),
-          lit(false).as("own"))
-      // lazy checkpoint + the emptiness probe as the materializing
-      // action: one job per round instead of checkpoint-then-count
-      // (optimization r13). NOTE (r13 advisor): the limit(1) probe can
-      // short-circuit — partitions it skips are later filled in by
-      // LocalRDDCheckpointData's missing-partition job, which is what
-      // the next round's references depend on; don't swap the probe
-      // for isEmpty or change the storage level assuming the probe
-      // materialized every partition.
-      val next = dists.select(col("node"), col("dist"), lit(true).as("own"))
-        .union(relaxed)
-        .groupBy(col("node"))
-        .agg(min(col("dist")).as("dist"),
-          min(when(col("own"), col("dist"))).as("prev"))
-        .localCheckpoint(false)
-      frontier = next.filter(col("prev").isNull || col("dist") < col("prev"))
-        .select(col("node"), col("dist"))
-      done = frontier.limit(1).count() == 0L
-      dists = next.select(col("node"), col("dist"))
-      it += 1
-    }
-    if (!done) throw new IllegalStateException(
-      s"SSSP did not converge within $SsspUnroll rounds — raise SsspUnroll " +
-        "AND the oracle horizon together")
-    dists.select(col("node").as("node_id"), col("dist").as("dist_micro"))
+      .select(col("node"), lit(0L).as("lbl"))
+    minLabelFixpoint(we, seed, hop = col("lbl") + col("cost"),
+        maxIters = SsspUnroll, mustConverge = true,
+        loopRows = graft.util.Loops.memoRows(GraphTables.weightedEdges(spark, dir)))
+      .select(col("node").as("node_id"), col("lbl").as("dist_micro"))
       .orderBy(col("node_id"))
-  } }
+  }
 
   // ---- g45: strongly connected components (trim + FW-BW coloring) ----
   // The one classic graph operator the deck lacked. The derivation
@@ -1901,7 +1850,7 @@ object GraphOps {
   //      a singleton SCC (removes the DAG bulk — without it, FW-BW
   //      peels one pivot SCC per round on DAG-heavy graphs);
   //   2. COLOR: forward min-label fixpoint (color(v) = min node that
-  //      reaches v) — reuses minLabelFixpoint on the directed edges;
+  //      reaches v) — minLabelFixpoint on the directed edges;
   //   3. MARK: backward flag propagation from each color's pivot
   //      RESTRICTED to its color class (sound: an SCC never spans
   //      color classes, and v backward-reaching its own pivot within
@@ -1920,45 +1869,6 @@ object GraphOps {
   // one iterative Tarjan pass over the collected core edge list: the
   // color/mark fixpoints are core-DIAMETER many sequential driver
   // rounds of tiny data, which one in-memory pass replaces outright.
-
-  /** Frontier (delta) min-label fixpoint: per round only nodes whose
-    * label improved last round probe the edge table — the g44
-    * relaxation shape, so per-round edge volume is
-    * edges-incident-to-frontier, not all E. `initFrontier` lets a
-    * caller seed with only the nodes that can propagate anything
-    * useful (the mark phase seeds pivots: a 1-label never improves
-    * another 1). Returns the converged labels. */
-  def minLabelFrontier(edges: DataFrame, start: DataFrame,
-      initFrontier: DataFrame, maxIters: Int): DataFrame =
-    graft.util.Loops.quiet(edges.sparkSession, graft.util.Loops.memoRows(edges)) {
-    var labels = start.localCheckpoint(true)
-    var frontier = initFrontier.localCheckpoint(true)
-    var it = 0
-    var done = frontier.limit(1).count() == 0L
-    while (it < maxIters && !done) {
-      val relaxed = edges.join(frontier, col("src") === col("node"))
-        .select(col("dst").as("node"), col("lbl"), lit(false).as("own"))
-      // lazy checkpoint + the frontier-emptiness probe as the single
-      // materializing job per round (optimization r13, same shape as
-      // rankLoopUntilStop/g44 — including g44's advisor note: limit(1)
-      // can short-circuit and later references lean on the
-      // LocalRDDCheckpointData fill-in job for skipped partitions)
-      val next = labels.select(col("node"), col("lbl"), lit(true).as("own"))
-        .union(relaxed)
-        .groupBy(col("node"))
-        .agg(min(col("lbl")).as("lbl"),
-          min(when(col("own"), col("lbl"))).as("prev"))
-        .localCheckpoint(false)
-      frontier = next.filter(col("lbl") < col("prev"))
-        .select(col("node"), col("lbl"))
-      done = frontier.limit(1).count() == 0L
-      labels = next.select(col("node"), col("lbl"))
-      it += 1
-    }
-    if (!done) throw new IllegalStateException(
-      s"frontier min-label propagation did not converge within $maxIters rounds")
-    labels
-  }
 
   /** Iterative (explicit-stack) Tarjan over a bounded collected core:
     * returns (node, min member of its SCC) for every node in `nodes`.
@@ -2257,13 +2167,13 @@ object GraphOps {
           remCnt = 0L
         } else {
         // -- phase 2: forward min-label colors
-        val startLbls = rem.select(col("node"), col("node").as("lbl"))
-        val colors = minLabelFrontier(e, startLbls, startLbls, SccPropCap)
+        val colors = minLabelFixpoint(e, rem.select(col("node"), col("node").as("lbl")),
+          maxIters = SccPropCap, mustConverge = true, loopRows = coreEdges)
         dbg(s"outer=$outer colors done")
         // -- phase 3: backward mark within color classes. Propagation
         // edges are the REVERSED intra-color edges; the pivot seeds 0,
         // everyone else 1, and min-label flips a node to 0 exactly
-        // when it reaches its pivot — minLabelFixpoint reused verbatim.
+        // when it reaches its pivot, so only pivots seed the frontier.
         val intraRev = e
           .join(colors.select(col("node").as("src"), col("lbl").as("cs")), Seq("src"))
           .join(colors.select(col("node").as("dst"), col("lbl").as("cd")), Seq("dst"))
@@ -2273,8 +2183,8 @@ object GraphOps {
           .localCheckpoint(true)
         val seed = colors.select(col("node"),
           when(col("lbl") === col("node"), lit(0L)).otherwise(lit(1L)).as("lbl"))
-        val marked = minLabelFrontier(intraRev, seed,
-            seed.filter(col("lbl") === 0L), SccPropCap)
+        val marked = minLabelFixpoint(intraRev, seed, seedIf = col("lbl") === 0L,
+            maxIters = SccPropCap, mustConverge = true)
           .filter(col("lbl") === 0L).select(col("node"))
           .localCheckpoint(true)
         dbg(s"outer=$outer marked done")

@@ -4,44 +4,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-9 hygiene batch: exercises the minLabelFixpoint stride
-  * parameter (advisor note — the composed-step convergence path
-  * shipped without a consumer) and the Fwht64 length contract. */
+/** Round-9 hygiene batch: e40's as-of lookup, s51/s52's rotations,
+  * t38's entropy bound and the Fwht64 length contract. */
 class Round43OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
   private lazy val spark = graft.GraftSession.local(threads = 4, shufflePartitions = 4)
 
   override def afterAll(): Unit = spark.stop()
-
-  test("minLabelFixpoint: stride=3 converges to the same labels as stride=1") {
-    val sym = graft.operators.graph.GraphTables.sym(spark, dir)
-    val start = sym.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-    def labels(stride: Int): Map[Long, Long] =
-      graft.operators.graph.GraphOps
-        .minLabelFixpoint(sym, start, maxIters = 64,
-          untilConverged = true, stride = stride)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val s1 = labels(1)
-    val s3 = labels(3)
-    assert(s1.nonEmpty)
-    assert(s3 == s1)
-  }
-
-  test("minLabelFixpoint: stride=3 on a 7-node path graph (chain needs composed hops)") {
-    // path 0-1-2-...-6: min label 0 must walk 6 hops; with stride=3
-    // that is 2 materializations + 1 certifying round
-    import spark.implicits._
-    val edges = (0L until 6L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
-      .toDF("src", "dst")
-    val start = (0L to 6L).map(n => (n, n)).toDF("node", "lbl")
-    val out = graft.operators.graph.GraphOps
-      .minLabelFixpoint(edges, start, maxIters = 10,
-        untilConverged = true, stride = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out == (0L to 6L).map(n => n -> 0L).toMap)
-  }
 
   test("e40: no fact row ever sees future dimension state (leakage-free)") {
     val out = graft.streaming.EventOps.e40Scd2Lookup(spark, dir).collect()
