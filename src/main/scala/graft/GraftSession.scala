@@ -9,6 +9,21 @@ import org.apache.spark.sql.SparkSession
   * reference sized its own worker pool by hand
   * (Runner.java:105 `getMaxNumberOfThreads`); on Spark the scheduler
   * owns that, we only shape the shuffle.
+  *
+  * Sessions of one context share generated code: artifact isolation
+  * is off. Spark's codegen cache (`CodeGenerator.compile`) keys each
+  * class on (task context classloader, code), and with isolation on
+  * every session's tasks run under a classloader of their own, so a
+  * fresh session misses the cache even for byte-identical code and
+  * recompiles (and HotSpot re-warms) every class it runs. A report
+  * per fresh session (`newSession()`) paid that for every plan; off,
+  * each plan's classes compile once per JVM. The price is that jars,
+  * files or archives one session adds with `addArtifact` are visible
+  * to the others; graft adds none. SQL confs stay per session: a
+  * conf that changes what a class does (ANSI overflow checks) changes
+  * its code, so it changes the cache key too. Sessions made later with
+  * `newSession()` inherit the setting through the SparkConf; setting
+  * it on a running session has no effect.
   */
 object GraftSession {
   def local(threads: Int = 32, shufflePartitions: Int = 32): SparkSession = {
@@ -38,6 +53,8 @@ object GraftSession {
       // A 30 s cadence bounds on-disk rounds without the former
       // stop-the-world System.gc() per peel round.
       .config("spark.cleaner.periodicGC.interval", "30s")
+      // one codegen cache for every session of this context (above)
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Same effect as spark.sql.extensions=graft.functions.GraftExtensions

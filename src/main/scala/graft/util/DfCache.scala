@@ -1,9 +1,12 @@
 package graft.util
 
+import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
@@ -23,22 +26,35 @@ import org.apache.spark.storage.StorageLevel
 object DfCache {
   private val cache = new java.util.HashMap[(SparkSession, String, String), DataFrame]()
   private val broadcasts = new java.util.HashMap[(SparkSession, String, String), Broadcast[_]]()
-  private val hooked = new java.util.HashSet[SparkSession]()
+  private val listening = new java.util.HashSet[SparkContext]()
 
-  // Eviction hook: frees this session's entries when the underlying
-  // context stops. NOTE the listener fires on APPLICATION end, not on
-  // an individual session close — a long-lived server multiplexing
-  // many short-lived sessions over one context must call
-  // [[evict]](session) from its own session-close path; the hook alone
-  // only guarantees cleanup at context shutdown. Callers hold the lock.
-  private def hook(spark: SparkSession): Unit =
-    if (hooked.add(spark)) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          evict(spark)
-      })
-    }
+  /** Frees every entry of one context's sessions when that context
+    * stops. It holds the context only, never a session: sessions come
+    * and go (one per report), the context outlives them all. NOTE it
+    * fires on APPLICATION end, not on an individual session close — a
+    * long-lived server multiplexing many short-lived sessions over one
+    * context must call [[evict]](session) from its own session-close
+    * path; the listener alone only guarantees cleanup at context
+    * shutdown. */
+  private[graft] final class Evictor(sc: SparkContext) extends SparkListener {
+    override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+      DfCache.synchronized {
+        sessions.filter(_.sparkContext eq sc).foreach(evict)
+        listening.remove(sc)
+      }
+  }
+
+  // One [[Evictor]] per context, registered with its first entry.
+  // Callers hold the lock.
+  private def hook(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    if (listening.add(sc)) sc.addSparkListener(new Evictor(sc))
+  }
+
+  /** The sessions that own at least one entry. */
+  private[graft] def sessions: Set[SparkSession] = synchronized {
+    (cache.keySet.asScala.iterator ++ broadcasts.keySet.asScala.iterator).map(_._1).toSet
+  }
 
   // Coarse reentrant lock, NOT ConcurrentHashMap.computeIfAbsent:
   // builds nest (pagerank's build caches the edge+degree table on the
@@ -113,6 +129,5 @@ object DfCache {
         bit.remove()
       }
     }
-    hooked.remove(spark)
   }
 }
