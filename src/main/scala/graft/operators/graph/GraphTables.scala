@@ -46,13 +46,33 @@ object GraphTables {
   private def vid(c: org.apache.spark.sql.Column, tag: Int) =
     c.cast("long") * 8 + tag
 
-  private def flip(df: DataFrame): DataFrame =
-    df.select(col("dst").as("src"), col("src").as("dst"))
-
-  private def branchDf(spark: SparkSession, dir: String, b: EdgeBranch): DataFrame =
-    Tables.load(spark, dir, b.table)
-      .select(vid(col(b.srcCol), b.srcTag).as("src"),
-        vid(col(b.dstCol), b.dstTag).as("dst"))
+  /** The `(src, dst)` rows of `branches`, and with `both` each row's
+    * reverse too, reading each distinct table ONCE: one scan per table
+    * emits all of its pairs through one `inline(array(struct…))`.
+    *
+    * Why one scan: Catalyst plans each union child as a scan of its own,
+    * so a union of per-branch, per-direction projections read a table
+    * once per branch and direction (sym planned 12 scans of 5 tables).
+    * At graft's table sizes a scan costs more than the rows it reads:
+    * Spark broadcasts the session's whole Hadoop conf once per scan
+    * (over a thousand properties, `yarn-default` and `mapred-default`
+    * entries included, which a parquet read never uses), and each scan
+    * adds a codegen subtree and an AQE stage input.
+    *
+    * Why once per exchange path: [[sym]] feeds two exchanges (the
+    * part→supplier pre-dedup and the layout repartition) and calls
+    * this once for each, so lineitem is read twice there and [[sym]]'s
+    * two-exchange argument is unchanged. */
+  private def edgeRows(spark: SparkSession, dir: String,
+      branches: Seq[EdgeBranch], both: Boolean): DataFrame =
+    branches.map(_.table).distinct.map { t =>
+      val pairs = for {
+        b <- branches if b.table == t
+        (s, d) = (vid(col(b.srcCol), b.srcTag), vid(col(b.dstCol), b.dstTag))
+        (x, y) <- if (both) Seq(s -> d, d -> s) else Seq(s -> d)
+      } yield struct(x.as("src"), y.as("dst"))
+      Tables.load(spark, dir, t).select(inline(array(pairs: _*)))
+    }.reduce(_.union(_))
 
   private def branchSql(b: EdgeBranch, distinct: Boolean, aliased: Boolean): String = {
     val d = if (distinct) "DISTINCT " else ""
@@ -80,6 +100,7 @@ object GraphTables {
     *     to ~distinct volume; deduping per direction would shuffle the
     *     duplicate-heavy stream twice);
     *  2. one layout repartition by `src` over the full union.
+    * Each path reads its tables once ([[edgeRows]]): six scans in all.
     * The final distinct (rare order→part repeats within an order) runs
     * IN PLACE: `HashPartitioning(src)` satisfies the (src, dst)
     * clustering an aggregate needs — equal pairs share a src — so no
@@ -97,11 +118,9 @@ object GraphTables {
     * partitioning). */
   def sym(spark: SparkSession, dir: String): DataFrame =
     graft.util.DfCache.cached(spark, dir, "graph_sym") {
-      val fwd = Branches.filterNot(_ == PsBranch)
-        .map(branchDf(spark, dir, _)).reduce(_.union(_))
-      val ps = branchDf(spark, dir, PsBranch)
-      val psBoth = ps.union(flip(ps)).distinct()
-      fwd.union(flip(fwd)).union(psBoth)
+      val psBoth = edgeRows(spark, dir, Seq(PsBranch), both = true).distinct()
+      edgeRows(spark, dir, Branches.filterNot(_ == PsBranch), both = true)
+        .union(psBoth)
         .repartition(col("src"))
         .distinct()
         .sortWithinPartitions(col("src"))
@@ -114,7 +133,7 @@ object GraphTables {
     * exchange on the edge side. */
   def directed(spark: SparkSession, dir: String): DataFrame =
     graft.util.DfCache.cached(spark, dir, "graph_dir") {
-      Branches.map(branchDf(spark, dir, _)).reduce(_.union(_))
+      edgeRows(spark, dir, Branches, both = false)
         .repartition(col("src"))
         .distinct()
         .sortWithinPartitions(col("src"))
@@ -127,7 +146,7 @@ object GraphTables {
     * cluster design too (bucketed-by-src and bucketed-by-dst copies). */
   def directedByDst(spark: SparkSession, dir: String): DataFrame =
     graft.util.DfCache.cached(spark, dir, "graph_dir_dst") {
-      Branches.map(branchDf(spark, dir, _)).reduce(_.union(_))
+      edgeRows(spark, dir, Branches, both = false)
         .repartition(col("dst"))
         .distinct()
         .sortWithinPartitions(col("dst"))
@@ -153,8 +172,7 @@ object GraphTables {
     * .edgesWithDeg]] so weighted rounds shuffle only the rank vector. */
   def weightedEdges(spark: SparkSession, dir: String): DataFrame =
     graft.util.DfCache.cached(spark, dir, "graph_wedges") {
-      val fwd = Branches.map(branchDf(spark, dir, _)).reduce(_.union(_))
-      val wed = fwd.union(flip(fwd))
+      val wed = edgeRows(spark, dir, Branches, both = true)
         .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
       val wdeg = wed.groupBy(col("src").as("wnode")).agg(sum(col("w")).as("wsum"))
       wed.join(wdeg, col("src") === col("wnode"))

@@ -1,8 +1,9 @@
 package graft.sources
 
+import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -84,22 +85,23 @@ object Tables {
       case None => spark.read.parquet(path) // missing: Spark's own error
     }
 
+  // getFileStatus/listStatus, not listFiles: listFiles wraps every
+  // leaf in a LocatedFileStatus, whose constructor reads the file's
+  // permission, and the local file system answers that by forking
+  // `ls -ld` (one process per load). These statuses load no permission.
   private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val root = fs.makeQualified(p)
-    if (!fs.exists(root)) None
-    else {
-      val leaves = Seq.newBuilder[(String, Long, Long)]
-      val it = fs.listFiles(root, true)
-      while (it.hasNext) {
-        val f = it.next()
-        leaves += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
+    val top = try Some(fs.getFileStatus(root)) catch { case _: FileNotFoundException => None }
+    top.map { st =>
+      def leaves(s: FileStatus): Seq[(String, Long, Long)] =
+        if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(leaves)
+        else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
       val conf = spark.conf.getAll.toSeq.filter { case (k, _) =>
         k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
       }.sorted
-      Some(SchemaKey(root.toString, leaves.result().sorted, conf))
+      SchemaKey(root.toString, leaves(st).sorted, conf)
     }
   }
 

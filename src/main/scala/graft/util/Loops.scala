@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 /** Driver-loop execution scope for the iterative operators (pagerank /
   * label fixpoints / peels).
@@ -43,11 +44,27 @@ object Loops {
   // every later loop reads the memo. WeakHashMap: entries die with
   // their DataFrame, so an evicted cache entry cannot pin rows forever.
   private val rowsMemo = new java.util.WeakHashMap[DataFrame, java.lang.Long]()
+
+  /** Row count of `df`, memoized per DataFrame. A persisted `df` whose
+    * every partition is already cached is not counted again: its cache
+    * keeps a row-count accumulator, and once every partition has been
+    * built (the same accumulator merge that marks it loaded) that
+    * value is read with no job. Otherwise `df` is counted.
+    *
+    * The accumulator can only overcount: a partition that is evicted
+    * and rebuilt adds its rows again. That is safe here because the
+    * count only ever feeds a regime gate or a loop-size estimate,
+    * never a result; both regimes of every gated operator return the
+    * same rows. */
   def memoRows(df: DataFrame): Long = {
     val hit = synchronized(rowsMemo.get(df))
     if (hit != null) hit.longValue()
     else {
-      val n = df.count()
+      val n = df.queryExecution.withCachedData match {
+        case r: InMemoryRelation if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+          r.cacheBuilder.rowCountStats.value.longValue
+        case _ => df.count()
+      }
       synchronized(rowsMemo.put(df, n))
       n
     }

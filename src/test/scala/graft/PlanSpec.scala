@@ -23,6 +23,21 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.queryExecution.executedPlan.toString
   }
 
+  /** Parquet scans in a DfCache entry's build, counted in the plan that
+    * ran it. A reused exchange is a leaf here, so a subtree the build
+    * reads twice through one exchange counts once. */
+  private def buildScans(df: DataFrame): Int = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    object Aqe extends AdaptiveSparkPlanHelper
+    df.count()
+    val build = Aqe.collectFirst(df.queryExecution.executedPlan) {
+      case s: InMemoryTableScanExec => s.relation.cacheBuilder.cachedPlan
+    }.getOrElse(fail("not a cached table"))
+    Aqe.collect(build) { case s: FileSourceScanExec => s }.size
+  }
+
   test("q2: filter and projection are pushed into the parquet scan") {
     val df = SparkEntry.queries("q2_filter_project")(spark, dir)
     val plan = planOf(df)
@@ -65,6 +80,18 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val exchanges = plan.linesIterator.count(l =>
       l.contains("Exchange") && !l.contains("ReusedExchange"))
     assert(exchanges == 2, s"expected 2 exchanges in sym build, got $exchanges")
+    // one scan per table per exchange path: the five main-path tables
+    // plus lineitem once more under the part→supplier pre-dedup
+    assert(buildScans(graft.operators.graph.GraphTables.sym(spark, dir)) == 6)
+  }
+
+  test("graph: the directed and weighted edge tables scan each table once") {
+    import graft.operators.graph.GraphTables
+    for ((name, df) <- Seq(
+        "graph_wedges" -> GraphTables.weightedEdges(spark, dir),
+        "graph_dir" -> GraphTables.directed(spark, dir),
+        "graph_dir_dst" -> GraphTables.directedByDst(spark, dir)))
+      assert(buildScans(df) == 5, s"$name: expected one scan per source table")
   }
 
   test("g5: pagerank iterations reuse the cached edge table") {

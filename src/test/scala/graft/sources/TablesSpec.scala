@@ -6,6 +6,10 @@ import java.util.concurrent.Executors
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 
 import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -19,9 +23,10 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{GraftSession, SparkEntry}
 
-/** `Tables.load`'s schema memo: a repeated load runs no Spark job, reads
-  * the same schema and rows as a plain inferred read, and never serves a
-  * rewritten table's or another parquet setting's schema. */
+/** `Tables.load`'s schema memo: a repeated load runs no Spark job and
+  * starts no OS process, reads the same schema and rows as a plain
+  * inferred read, and never serves a rewritten table's or another
+  * parquet setting's schema. */
 class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
@@ -102,6 +107,25 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (plain, _) = jobsRunBy(spark.read.parquet(s"$dir/orders.parquet"))
     assert(plain >= 1, "schema inference should have run a job")
     assert(df.count() > 0)
+  }
+
+  test("a warm load starts no OS process") {
+    // Hadoop's local file system forks `ls -ld` for any status whose
+    // permission is read; the memo key's listing must read none
+    Tables.load(spark, dir, "lineitem").schema
+    val rec = new Recording()
+    val started = try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      Tables.load(spark, dir, "lineitem")
+      // the recording does see a process start
+      new ProcessBuilder("true").start().waitFor()
+      rec.stop()
+      val file = Files.createTempFile("graft_tables", ".jfr")
+      rec.dump(file)
+      RecordingFile.readAllEvents(file).asScala.map(_.getString("command")).toSeq
+    } finally rec.close()
+    assert(started == Seq("true"), s"processes started by a warm load: $started")
   }
 
   test("every table: the memoized read equals a plain inferred read") {
