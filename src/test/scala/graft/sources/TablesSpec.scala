@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.UUID
 import java.util.concurrent.Executors
 
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -15,13 +14,12 @@ import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import graft.{GraftSession, SparkEntry}
+import graft.{GraftSession, SparkEntry, SpecJobs}
 
 /** `Tables.load`'s schema memo: a repeated load runs no Spark job and
   * starts no OS process, reads the same schema and rows as a plain
@@ -32,43 +30,7 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val dir = "/root/testdata/sf0.001"
   private lazy val spark = GraftSession.local(threads = 4, shufflePartitions = 4)
 
-  override def beforeAll(): Unit = spark.sparkContext.addSparkListener(Jobs)
   override def afterAll(): Unit = spark.stop()
-
-  private val Tag = "graft.spec.jobTag"
-
-  /** Counts job starts by the `Tag` local property they carry. */
-  private object Jobs extends SparkListener {
-    private val started = scala.collection.mutable.Map.empty[String, Int]
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      Option(e.properties).flatMap(p => Option(p.getProperty(Tag))).foreach { t =>
-        started(t) = started.getOrElse(t, 0) + 1
-        notifyAll()
-      }
-    }
-    def count(tag: String): Int = synchronized(started.getOrElse(tag, 0))
-    def await(tag: String): Unit = synchronized {
-      val deadline = System.nanoTime() + 10.seconds.toNanos
-      while (!started.contains(tag) && System.nanoTime() < deadline) wait(50)
-      assert(started.contains(tag), s"listener never saw job $tag")
-    }
-  }
-
-  /** The Spark jobs `body` starts on this thread. A marker job run after
-    * it drains the listener bus, which delivers events in post order. */
-  private def jobsRunBy[T](body: => T): (Int, T) = {
-    val sc = spark.sparkContext
-    val tag = UUID.randomUUID().toString
-    def tagged[R](t: String)(f: => R): R = {
-      val prev = sc.getLocalProperty(Tag)
-      sc.setLocalProperty(Tag, t)
-      try f finally sc.setLocalProperty(Tag, prev)
-    }
-    val result = tagged(tag)(body)
-    tagged(tag + "-drain")(sc.parallelize(Seq(1), 1).count())
-    Jobs.await(tag + "-drain")
-    (Jobs.count(tag), result)
-  }
 
   /** The plain, schema-inferring read `Tables.load` replaces. */
   private def plainLoad(s: SparkSession, d: String, name: String): DataFrame = {
@@ -101,10 +63,10 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a repeated load runs no Spark job") {
     Tables.load(spark, dir, "orders").schema
-    val (n, df) = jobsRunBy(Tables.load(spark, dir, "orders"))
+    val (n, df) = SpecJobs.runBy(spark)(Tables.load(spark, dir, "orders"))
     assert(n == 0, s"a warm Tables.load ran $n jobs")
     // the counter does see an inferring read's footer job
-    val (plain, _) = jobsRunBy(spark.read.parquet(s"$dir/orders.parquet"))
+    val (plain, _) = SpecJobs.runBy(spark)(spark.read.parquet(s"$dir/orders.parquet"))
     assert(plain >= 1, "schema inference should have run a job")
     assert(df.count() > 0)
   }
@@ -122,8 +84,10 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
       new ProcessBuilder("true").start().waitFor()
       rec.stop()
       val file = Files.createTempFile("graft_tables", ".jfr")
-      rec.dump(file)
-      RecordingFile.readAllEvents(file).asScala.map(_.getString("command")).toSeq
+      try {
+        rec.dump(file)
+        RecordingFile.readAllEvents(file).asScala.map(_.getString("command")).toSeq
+      } finally Files.delete(file)
     } finally rec.close()
     assert(started == Seq("true"), s"processes started by a warm load: $started")
   }
@@ -131,7 +95,7 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("every table: the memoized read equals a plain inferred read") {
     Tables.all.foreach { t =>
       Tables.load(spark, dir, t)
-      val (n, memo) = jobsRunBy(Tables.load(spark, dir, t))
+      val (n, memo) = SpecJobs.runBy(spark)(Tables.load(spark, dir, t))
       assert(n == 0, s"$t: warm load ran $n jobs")
       val plain = plainLoad(spark, dir, t)
       assert(memo.schema == plain.schema, t)
@@ -148,7 +112,7 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // single-file layout: the file itself is replaced
     writeSingleFile(v1, d.resolve("t.parquet"))
     assert(Tables.load(spark, d.toString, "t").schema.fieldNames.toSeq == Seq("a"))
-    assert(jobsRunBy(Tables.load(spark, d.toString, "t"))._1 == 0)
+    assert(SpecJobs.runBy(spark)(Tables.load(spark, d.toString, "t"))._1 == 0)
     writeSingleFile(v2, d.resolve("t.parquet"))
     val t2 = Tables.load(spark, d.toString, "t")
     assert(t2.schema.fieldNames.toSeq == Seq("a", "b"))
@@ -170,8 +134,8 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Tables.load(spark, d.toString, "bin").schema("b").dataType == BinaryType)
     assert(Tables.load(asString, d.toString, "bin").schema("b").dataType == StringType)
     // both are memoized now, each under its own settings
-    val (n1, again) = jobsRunBy(Tables.load(spark, d.toString, "bin"))
-    val (n2, againStr) = jobsRunBy(Tables.load(asString, d.toString, "bin"))
+    val (n1, again) = SpecJobs.runBy(spark)(Tables.load(spark, d.toString, "bin"))
+    val (n2, againStr) = SpecJobs.runBy(spark)(Tables.load(asString, d.toString, "bin"))
     assert(n1 == 0 && n2 == 0)
     assert(again.schema("b").dataType == BinaryType)
     assert(againStr.schema("b").dataType == StringType)
@@ -200,7 +164,7 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val built = Seq("e26_rfm", "q3_join_agg", "q72_prospects", "q47_sketch_algebra")
     built.foreach(q => SparkEntry.queries(q)(spark, dir))
     built.foreach { q =>
-      val (n, df) = jobsRunBy(SparkEntry.queries(q)(spark, dir))
+      val (n, df) = SpecJobs.runBy(spark)(SparkEntry.queries(q)(spark, dir))
       assert(n == 0, s"$q: building the DataFrame ran $n jobs")
       assert(df.schema.nonEmpty)
     }

@@ -1,6 +1,5 @@
 package graft.util
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,32 +50,6 @@ class LoopsSpec extends AnyFunSuite {
     assert(spark.conf.get(key) === "true")
   }
 
-  /** Jobs started while `body` runs, by a listener. A marker job run
-    * after `body` drains the listener bus, which delivers in order. */
-  private def jobsRunBy[T](body: => T): (Int, T) = {
-    val sc = spark.sparkContext
-    val mark = java.util.UUID.randomUUID().toString
-    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.put(Option(e.properties).flatMap(p => Option(p.getProperty("graft.spec.mark"))).getOrElse(""))
-    }
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      sc.setLocalProperty("graft.spec.mark", mark)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.mark", null)
-      var jobs = 0
-      var last = ""
-      while (last != mark) {
-        last = Option(seen.poll(10, java.util.concurrent.TimeUnit.SECONDS))
-          .getOrElse(fail("the listener never saw the marker job"))
-        if (last != mark) jobs += 1
-      }
-      (jobs, out)
-    } finally sc.removeSparkListener(l)
-  }
-
   // `end` keeps the plans distinct: Spark shares one cache between equal plans
   private def cachedRange(name: String, end: Long): DataFrame =
     DfCache.cached(spark, "/loopsspec", name)(spark.range(0, end, 1, 4).filter("id % 3 = 0").toDF())
@@ -84,14 +57,14 @@ class LoopsSpec extends AnyFunSuite {
   test("memoRows of a counted cache entry reads the cache's row count with no job") {
     val df = cachedRange("counted", 1000)
     val n = df.count()
-    val (jobs, rows) = jobsRunBy(Loops.memoRows(df))
+    val (jobs, rows) = graft.SpecJobs.runBy(spark)(Loops.memoRows(df))
     assert(jobs == 0, s"memoRows over a loaded cache ran $jobs jobs")
     assert(rows == n && n == 334L)
   }
 
   test("memoRows of a cache entry not yet loaded counts it") {
     val df = cachedRange("unloaded", 2000)
-    val (jobs, rows) = jobsRunBy(Loops.memoRows(df))
+    val (jobs, rows) = graft.SpecJobs.runBy(spark)(Loops.memoRows(df))
     assert(jobs >= 1, "an unloaded entry must be counted")
     assert(rows == df.count())
   }
