@@ -24,7 +24,7 @@ object ScaleTrail {
     // optional probe-name filter: run only the named ops (resume a
     // partial trail without re-paying completed probes); args of the
     // form key=value become session confs (path forcing — e.g.
-    // spark.graft.scc.trimAdjProbeCap=0 runs the pre-probe trim)
+    // spark.graft.graph.driverNodeCap=0 runs g45's distributed FW-BW)
     val (confArgs, names) = args.drop(1).partition(_.contains("="))
     val confs = Regimes.checked(confArgs.toSeq.map(_.split("=", 2)).map(a => (a(0), a(1))))
     val only = names.toSet

@@ -6,9 +6,11 @@ import org.apache.spark.sql.functions.col
 /** Compressed sparse row adjacency of a `(src, dst)` edge table: node
   * `i` is `ids(i)` (sorted ascending) and its neighbours are the node
   * indices `tgt(off(i) until off(i + 1))`. Every `dst` must also be a
-  * `src` — true of sym, which holds both directions of every edge, and
-  * of any component of it. Footprint: 4 bytes per edge row plus 12
-  * per node, so an 8M-row sym is a 32 MB target array plus the nodes.
+  * `src` — true of sym, which holds both directions of every edge, of
+  * any component of it, and of a trimmed SCC core, where every node
+  * keeps an in- and an out-edge. Footprint: 4 bytes per edge row plus
+  * 12 per node, so an 8M-row sym is a 32 MB target array plus the
+  * nodes; [[Csr.of]] collects about 8 bytes per edge on the way.
   */
 private[graft] final class Csr(val ids: Array[Long], val off: Array[Int],
     val tgt: Array[Int]) extends Serializable {
@@ -45,6 +47,62 @@ private[graft] final class Csr(val ids: Array[Long], val off: Array[Int],
       }
     }
     (dist, java.util.Arrays.copyOf(queue, tail))
+  }
+
+  /** Strongly connected components by one iterative Tarjan pass: the
+    * smallest member id of node `v`'s component, per node index.
+    * Working heap beyond the CSR: five int arrays and one boolean
+    * array of `n`, plus the `n`-long result. */
+  def sccMinIds(): Array[Long] = {
+    val index = Array.fill(n)(-1)
+    val low = new Array[Int](n)
+    val onStack = new Array[Boolean](n)
+    val stack = new Array[Int](n)  // Tarjan's stack of open nodes
+    var top = 0
+    val path = new Array[Int](n)   // the DFS path; next(v) is v's next edge
+    val next = new Array[Int](n)
+    var depth = 0
+    val minId = new Array[Long](n)
+    var counter = 0
+    def open(w: Int): Unit = {
+      path(depth) = w; depth += 1
+      next(w) = off(w)
+      index(w) = counter; low(w) = counter; counter += 1
+      stack(top) = w; top += 1; onStack(w) = true
+    }
+    var root = 0
+    while (root < n) {
+      if (index(root) < 0) {
+        open(root)
+        while (depth > 0) {
+          val v = path(depth - 1)
+          if (next(v) < off(v + 1)) {
+            val w = tgt(next(v))
+            next(v) += 1
+            if (index(w) < 0) open(w)
+            else if (onStack(w) && index(w) < low(v)) low(v) = index(w)
+          } else {
+            depth -= 1
+            if (low(v) == index(v)) {
+              // v roots a component: its members sit above it on the
+              // stack, and ids are sorted, so the least index is the min
+              var first = top - 1
+              var mn = v
+              while (stack(first) != v) { mn = math.min(mn, stack(first)); first -= 1 }
+              var k = first
+              while (k < top) { onStack(stack(k)) = false; minId(stack(k)) = ids(mn); k += 1 }
+              top = first
+            }
+            if (depth > 0) {
+              val parent = path(depth - 1)
+              if (low(v) < low(parent)) low(parent) = low(v)
+            }
+          }
+        }
+      }
+      root += 1
+    }
+    minId
   }
 }
 

@@ -1863,116 +1863,16 @@ object GraphOps {
   // edges-incident-to-remaining, shrinking monotonically. Driver-side
   // scalars are the convergence counts only (the g44 loop class).
   private val SccOuterCap = 8
-  private val SccTrimCap = 40
+  private val SccMaxTrimRounds = 40
   private val SccPropCap = 64
   // Post-trim cores under the driver caps finish on the DRIVER with
-  // one iterative Tarjan pass over the collected core edge list: the
+  // one Tarjan pass over the core's CSR (`Csr.sccMinIds`): the
   // color/mark fixpoints are core-DIAMETER many sequential driver
   // rounds of tiny data, which one in-memory pass replaces outright.
-
-  /** Iterative (explicit-stack) Tarjan over a bounded collected core:
-    * returns (node, min member of its SCC) for every node in `nodes`.
-    * Nodes absent from the edge arrays are their own singleton SCCs.
-    * Runs on the driver — callers gate the input size
-    * (SccDriverNodeCap / SccDriverEdgeCap). Inputs are PRIMITIVE long
-    * arrays and the node index is binary search over `nodes` (sorted
-    * IN PLACE here) — no boxed HashMap, no tuple intermediates — so
-    * at-cap heap is the arrays themselves (~0.6 GB, see the cap
-    * sizing note). Every edge endpoint MUST appear in `nodes`; a
-    * violation fails with a named error, not an opaque NPE. */
-  private[graft] def tarjanSccMinLabels(
-      nodes: Array[Long], srcs: Array[Long], dsts: Array[Long]): Seq[(Long, Long)] = {
-    require(srcs.length == dsts.length,
-      s"tarjanSccMinLabels: ${srcs.length} srcs vs ${dsts.length} dsts")
-    val n = nodes.length
-    val m = srcs.length
-    java.util.Arrays.sort(nodes)
-    def idxOf(u: Long, side: String): Int = {
-      val j = java.util.Arrays.binarySearch(nodes, u)
-      require(j >= 0,
-        s"tarjanSccMinLabels: edge $side endpoint $u is not in `nodes` — " +
-          "the caller must pass the closed node set of the collected core")
-      j
-    }
-    // CSR adjacency
-    val outDeg = new Array[Int](n)
-    var i = 0
-    while (i < m) { outDeg(idxOf(srcs(i), "src")) += 1; i += 1 }
-    val off = new Array[Int](n + 1)
-    i = 0
-    while (i < n) { off(i + 1) = off(i) + outDeg(i); i += 1 }
-    val fill = off.clone()
-    val tgt = new Array[Int](m)
-    i = 0
-    while (i < m) {
-      val ui = idxOf(srcs(i), "src")
-      tgt(fill(ui)) = idxOf(dsts(i), "dst"); fill(ui) += 1
-      i += 1
-    }
-    val index = Array.fill(n)(-1)
-    val low = new Array[Int](n)
-    val onStack = new Array[Boolean](n)
-    val comp = Array.fill(n)(-1)
-    val stack = new java.util.ArrayDeque[Integer]()
-    var counter = 0
-    var nComp = 0
-    // explicit DFS stack of (vertex, next-child pointer)
-    val vs = new java.util.ArrayDeque[Integer]()
-    val ps = new java.util.ArrayDeque[Integer]()
-    var root = 0
-    while (root < n) {
-      if (index(root) == -1) {
-        vs.push(root); ps.push(off(root))
-        index(root) = counter; low(root) = counter; counter += 1
-        stack.push(root); onStack(root) = true
-        while (!vs.isEmpty) {
-          val v = vs.peek().intValue()
-          val p = ps.pop().intValue()
-          if (p < off(v + 1)) {
-            ps.push(p + 1)
-            val w = tgt(p)
-            if (index(w) == -1) {
-              vs.push(w); ps.push(off(w))
-              index(w) = counter; low(w) = counter; counter += 1
-              stack.push(w); onStack(w) = true
-            } else if (onStack(w) && index(w) < low(v)) low(v) = index(w)
-          } else {
-            vs.pop()
-            if (low(v) == index(v)) {
-              var done = false
-              while (!done) {
-                val w = stack.pop().intValue()
-                onStack(w) = false
-                comp(w) = nComp
-                done = w == v
-              }
-              nComp += 1
-            }
-            if (!vs.isEmpty) {
-              val parent = vs.peek().intValue()
-              if (low(v) < low(parent)) low(parent) = low(v)
-            }
-          }
-        }
-      }
-      root += 1
-    }
-    val minOf = Array.fill(nComp)(Long.MaxValue)
-    i = 0
-    while (i < n) {
-      if (nodes(i) < minOf(comp(i))) minOf(comp(i)) = nodes(i)
-      i += 1
-    }
-    (0 until n).map(j => (nodes(j), minOf(comp(j))))
-  }
 
   /** SCC ids (scc_id = min member) for every node of a directed
     * (src, dst) edge table. */
   def sccOf(edges0: DataFrame): DataFrame = {
-    val t0 = System.nanoTime()
-    def dbg(msg: => String): Unit =
-      if (sys.env.contains("GRAFT_SCC_DEBUG"))
-        System.err.println(f"[scc +${(System.nanoTime() - t0) / 1e9}%.1fs] $msg")
     val spark = edges0.sparkSession
     // no input checkpoint: the gated caller passes the DfCache'd
     // sccEdges layout, and re-materializing an E-row copy DOUBLED the
@@ -2007,89 +1907,19 @@ object GraphOps {
       var deadCnt = dead.count()
       // Scan economics (the r9 finding: trim is SCAN-bound, not
       // round-bound — rounds × 2 full-E scans dominated the sf10
-      // audit): two complementary moves, both measured at sf10:
-      //  1. after the first (V-sized) wave's decrements land, SHRINK
-      //     the scan set once to the surviving nodes;
-      //  2. for the up-to-40 SMALL tail waves, probe a once-built
-      //     per-node adjacency instead of scanning edges: the round
-      //     then reads V-core rows once (vs E-core rows twice) and
-      //     explodes only Σ deg(dead) neighbor entries — total probe
-      //     volume across ALL rounds is ≤ 2·E amortized, because a
-      //     node's lists explode exactly once, the round it dies.
-      // Mega-hubs (≥ trimHubDegCap neighbors) are EXCLUDED from the
-      // adjacency build — at 100 TB a hub's neighbor array would be
-      // a multi-GB single row — and their rare deaths fall back to
-      // the edge-scan path for that round.
+      // audit): after the first (V-sized) wave's decrements land,
+      // SHRINK the scan set once to the surviving nodes.
       var eTrim = e
       var shrunk = false
-      val probeCap = Regimes.SccTrimAdjProbeCap(spark)
-      val hubCap = Regimes.SccTrimHubDegCap(spark)
-      // The adjacency build costs ~one full-E pass (the thing the
-      // probe exists to avoid), so it only pays when SEVERAL small
-      // rounds remain. Remaining tail length is unknowable upfront;
-      // the proxy that was measured to matter at sf10: that trim
-      // converged in 3 rounds, so an eager build on the FIRST small
-      // wave bought one round's saving for a 490 s build (the r12
-      // regression). Build only after `trimProbeAfter` CONSECUTIVE
-      // small waves — short tails never build, long tails amortize
-      // the build across their remaining dozens of rounds.
-      val probeAfter = Regimes.SccTrimProbeAfter(spark)
-      var smallStreak = 0L
-      var adj: DataFrame = null      // node → (out[], in[]) sans hubs
-      var hubs: DataFrame = null     // the excluded nodes
-      while (deadCnt > 0L && t < SccTrimCap) {
-        // no explicit broadcast hint on the edge-scan path: the FIRST
-        // trim wave can be V-sized (every source/sink stratum at
-        // once) and forcing it into the driver would be the scale
-        // bug; AQE broadcasts the later, genuinely-small waves on its
-        // own
-        if (shrunk && deadCnt <= probeCap) smallStreak += 1 else smallStreak = 0
-        // a large wave after the build still takes the scan path (its
-        // dead set is too big to broadcast); the built adjacency
-        // stays valid for later small waves regardless
-        val probeRound = shrunk && deadCnt <= probeCap &&
-          (adj != null || smallStreak > probeAfter)
-        if (probeRound && adj == null) {
-          adj = eTrim
-            .select(col("src").as("node"), col("dst").as("nbr"), lit(1L).as("o"))
-            .union(eTrim.select(col("dst").as("node"), col("src").as("nbr"), lit(0L).as("o")))
-            .groupBy(col("node"))
-            .agg(collect_list(when(col("o") === 1L, col("nbr"))).as("outn"),
-              collect_list(when(col("o") === 0L, col("nbr"))).as("inn"))
-            .filter(size(col("outn")) + size(col("inn")) < hubCap)
-            .localCheckpoint(true)
-          hubs = deg.select(col("node"))
-            .join(adj.select(col("node")), Seq("node"), "left_anti")
-            .localCheckpoint(true)
-        }
-        val (decIn, decOut) =
-          if (probeRound) {
-            val touched = adj
-              .join(broadcast(dead), Seq("node"))
-              .select(col("outn"), col("inn")).localCheckpoint(true)
-            val deadHubs = hubs.join(broadcast(dead), Seq("node"))
-            val di0 = touched.select(explode(col("outn")).as("node"))
-              .groupBy(col("node")).agg(count(lit(1)).as("di"))
-            val do0 = touched.select(explode(col("inn")).as("node"))
-              .groupBy(col("node")).agg(count(lit(1)).as("dou"))
-            if (deadHubs.limit(1).count() == 0L) (di0, do0)
-            else {
-              // rare: a mega-hub died this round — its neighbors come
-              // from one edge scan, merged with the probe counts
-              val dh = deadHubs.localCheckpoint(true)
-              val dhIn = eTrim.join(dh.select(col("node").as("src")), Seq("src"))
-                .groupBy(col("dst").as("node")).agg(count(lit(1)).as("di"))
-              val dhOut = eTrim.join(dh.select(col("node").as("dst")), Seq("dst"))
-                .groupBy(col("src").as("node")).agg(count(lit(1)).as("dou"))
-              (di0.union(dhIn).groupBy(col("node")).agg(sum(col("di")).as("di")),
-                do0.union(dhOut).groupBy(col("node")).agg(sum(col("dou")).as("dou")))
-            }
-          } else {
-            (eTrim.join(dead.select(col("node").as("src")), Seq("src"))
-              .groupBy(col("dst").as("node")).agg(count(lit(1)).as("di")),
-              eTrim.join(dead.select(col("node").as("dst")), Seq("dst"))
-                .groupBy(col("src").as("node")).agg(count(lit(1)).as("dou")))
-          }
+      while (deadCnt > 0L && t < SccMaxTrimRounds) {
+        // no explicit broadcast hint: the FIRST trim wave can be
+        // V-sized (every source/sink stratum at once) and forcing it
+        // into the driver would be the scale bug; AQE broadcasts the
+        // later, genuinely-small waves on its own
+        val decIn = eTrim.join(dead.select(col("node").as("src")), Seq("src"))
+          .groupBy(col("dst").as("node")).agg(count(lit(1)).as("di"))
+        val decOut = eTrim.join(dead.select(col("node").as("dst")), Seq("dst"))
+          .groupBy(col("src").as("node")).agg(count(lit(1)).as("dou"))
         deg = deg.join(dead, Seq("node"), "left_anti")
           .join(decIn, Seq("node"), "left_outer")
           .join(decOut, Seq("node"), "left_outer")
@@ -2101,8 +1931,6 @@ object GraphOps {
           .select(col("node")).localCheckpoint(true)
         deadCnt = dead.count()
         t += 1
-        dbg(s"outer=$outer trim round=$t nextWave=$deadCnt " +
-          s"path=${if (probeRound) "PROBE" else "SCAN"}")
         if (!shrunk && deadCnt > 0L) {
           // edges to wave-1 dead have already decremented, so the
           // semi-filtered set sees every remaining stratum correctly
@@ -2114,8 +1942,7 @@ object GraphOps {
         }
       }
       if (deadCnt > 0L) throw new IllegalStateException(
-        s"SCC trim did not reach fixpoint within $SccTrimCap rounds")
-      dbg(s"outer=$outer trim done: rounds=$t")
+        s"SCC trim did not reach fixpoint within $SccMaxTrimRounds rounds")
       val alive2 = deg.select(col("node")).localCheckpoint(true)
       acc += rem.join(alive2, Seq("node"), "left_anti")
         .select(col("node"), col("node").as("scc"))
@@ -2124,7 +1951,6 @@ object GraphOps {
       remCnt = rem.count()
       // one edge filter at the end of the fixpoint, laid out by src
       // for the propagation phases (inside the remCnt > 0 branch)
-      dbg(s"outer=$outer post-trim rem=$remCnt")
       if (remCnt > 0) {
         // the delta peel never rewrote e — filter to the surviving
         // core once, laid out by src: both fixpoints join the V-row
@@ -2136,40 +1962,26 @@ object GraphOps {
         val coreEdges = e.count()
         if (remCnt <= Regimes.DriverNodeCap(spark) &&
             coreEdges <= Regimes.DriverEdgeCap(spark)) {
-          // bounded-core fast path: one iterative Tarjan pass over
-          // the collected core replaces BOTH propagation fixpoints
-          // AND all later outer rounds (it emits every core SCC,
-          // singletons included). Output convention unchanged:
-          // scc_id = min member, a partition property independent
-          // of the algorithm that found it.
-          // toLocalIterator into PRIMITIVE long arrays (one partition
-          // of Rows resident at a time), not collect(): the previous
-          // Array[Row] + boxed-tuple path peaked at multi-GB driver
-          // heap at the caps; this is the arrays' 0.3 GB.
-          val srcs = new Array[Long](coreEdges.toInt)
-          val dsts = new Array[Long](coreEdges.toInt)
-          var k = 0
-          val eIt = e.toLocalIterator()
-          while (eIt.hasNext) {
-            val row = eIt.next(); srcs(k) = row.getLong(0); dsts(k) = row.getLong(1)
-            k += 1
-          }
-          require(k == coreEdges, s"core edge recount drifted: $k vs $coreEdges")
-          val coreNodes = new Array[Long](remCnt.toInt)
-          k = 0
-          val nIt = rem.select(col("node")).toLocalIterator()
-          while (nIt.hasNext) { coreNodes(k) = nIt.next().getLong(0); k += 1 }
-          require(k == remCnt, s"core node recount drifted: $k vs $remCnt")
-          acc += spark.createDataFrame(tarjanSccMinLabels(coreNodes, srcs, dsts))
+          // bounded-core fast path: one Tarjan pass over the core's
+          // CSR replaces BOTH propagation fixpoints AND all later
+          // outer rounds (it emits every core SCC, singletons
+          // included). Output convention unchanged: scc_id = min
+          // member, a partition property independent of the
+          // algorithm that found it. After the trim every core node
+          // keeps an in- and an out-edge inside the core, so every
+          // dst is a src: the closure `Csr.of` needs.
+          val csr = Csr.of(e)
+          require(csr.n == remCnt, s"core CSR holds ${csr.n} nodes, the trim left $remCnt")
+          require(csr.off(csr.n) == coreEdges,
+            s"core CSR holds ${csr.off(csr.n)} edges, the core has $coreEdges")
+          acc += spark.createDataFrame(csr.ids.toSeq.zip(csr.sccMinIds()))
             .toDF("node", "scc")
-          dbg(s"outer=$outer driver tarjan done: nodes=$remCnt edges=$coreEdges")
           rem = rem.limit(0)
           remCnt = 0L
         } else {
         // -- phase 2: forward min-label colors
         val colors = minLabelFixpoint(e, rem.select(col("node"), col("node").as("lbl")),
           maxIters = SccPropCap, mustConverge = true, loopRows = coreEdges)
-        dbg(s"outer=$outer colors done")
         // -- phase 3: backward mark within color classes. Propagation
         // edges are the REVERSED intra-color edges; the pivot seeds 0,
         // everyone else 1, and min-label flips a node to 0 exactly
@@ -2187,7 +1999,6 @@ object GraphOps {
             maxIters = SccPropCap, mustConverge = true)
           .filter(col("lbl") === 0L).select(col("node"))
           .localCheckpoint(true)
-        dbg(s"outer=$outer marked done")
         acc += marked.join(colors, Seq("node"))
           .select(col("node"), col("lbl").as("scc"))
           .localCheckpoint(true)
@@ -2371,8 +2182,6 @@ object GraphOps {
             col("m.a").as("a"), col("m.b").as("b"), col("m.cv").as("par"))
           .localCheckpoint(false)
         val nPicked = picked.count()
-        if (sys.env.contains("GRAFT_SCC_DEBUG"))
-          System.err.println(s"[boruvka] r=$r picked=$nPicked t=${System.nanoTime() / 1000000}")
         if (nPicked == 0L) done = true
         else {
           // lazy select off the checkpointed pick — no per-round job;
@@ -2478,8 +2287,6 @@ object GraphOps {
             .select(col("ncu").as("cu"), col("ncv").as("cv"),
               col("m.cost").as("cost"), col("m.a").as("a"), col("m.b").as("b"))
             .localCheckpoint(false)
-          if (sys.env.contains("GRAFT_SCC_DEBUG"))
-            System.err.println(s"[boruvka] r=$r relabeled t=${System.nanoTime() / 1000000}")
           r += 1
         }
       }
@@ -2509,9 +2316,6 @@ object GraphOps {
         overHorizon.foreach(m => System.err.println(s"[boruvka] horizon: $m"))
       }
     }
-    if (sys.env.contains("GRAFT_SCC_DEBUG"))
-      System.err.println(
-        s"[boruvka] rounds=$r driver_only=$allDriverRounds maxDepth=$maxChainDepth")
     // empty/edgeless input ⇒ empty forest (degenerate-input contract)
     if (forest.isEmpty)
       e.select(col("a"), col("b"), col("cost")).limit(0)
@@ -2954,16 +2758,12 @@ object GraphOps {
     var curWave: DataFrame = null  // edges the last round removed — CHECKPOINTED
                                    // whenever a delta round may consume it
     var lastCkpt = -1              // last full-round parquet still on disk
-    def tdbg(msg: => String): Unit =
-      if (sys.env.contains("GRAFT_SCC_DEBUG"))
-        System.err.println(s"[g33 +${System.nanoTime() / 1000000}ms] $msg")
     try {
     while (r <= maxRounds && (r == 1 || traj(r - 1)._2 < traj(r - 2)._2)) {
       // keep the dir's mtime live across arbitrarily long rounds so
       // the entry sweep of a CONCURRENT invocation can't reap it
       new java.io.File(ckptBase).setLastModified(System.currentTimeMillis())
       val lastWave = if (r == 1) Long.MaxValue else traj(r - 2)._2 - traj(r - 1)._2
-      tdbg(s"round $r start, lastWave=$lastWave path=${if (lastWave > deltaCap) "FULL" else "DELTA"}")
       if (lastWave > deltaCap) {
         // FULL round: re-enumerate supports over the current edge set.
         // Gate-scale rounds checkpoint LAZILY in memory — the count
@@ -2990,7 +2790,6 @@ object GraphOps {
           .join(next.select(col("ou"), col("ov")), Seq("ou", "ov"), "left_anti")
         if (traj(r - 1)._2 - traj(r)._2 <= deltaCap)
           curWave = curWave.localCheckpoint(true)
-        tdbg(s"round $r full done, survivors=${traj.last._2}")
         if (lastCkpt >= 0) dropRound(lastCkpt)
         lastCkpt = r
         curSup = next
@@ -3060,7 +2859,6 @@ object GraphOps {
             (col("sup") - coalesce(col("dec"), lit(0L))).as("sup"))
         val surv = updated.filter(col("sup") >= TrussK - 2)
         traj += ((r, surv.count()))
-        tdbg(s"round $r delta done, survivors=${traj.last._2}")
         curWave = updated.filter(col("sup") < TrussK - 2)
           .select(col("ou"), col("ov"))
         curSup = surv

@@ -2,7 +2,7 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** Every `spark.graft.*` key, declared once: nine size gates and the
+/** Every `spark.graft.*` key, declared once: six size gates and the
   * checkpoint root. A gated operator has two regimes: the fast one at
   * or under the cap, and the over-cap one, the only one that exists at
   * 100 TB (the per-operand broadcast-or-partition rule). A cap is a
@@ -30,20 +30,14 @@ object Regimes {
   val GraphBroadcastCap = Gate("spark.graft.graph.broadcastCap", 8000000L, "sym rows",
     "kcorePeel's per-round AQE shuffle peel; bfsLevels' per-hop shuffle hops")
   // under both driver caps: a primitive-array collect on the driver
-  // (g40's seed component, g45's post-trim core, a g46 round's picks),
-  // ≈0.6 GB transient at the caps in g45, sized for a 4 GB driver
+  // (g40's seed component, g45's post-trim core, a g46 round's picks);
+  // g45's core goes through `Csr.of`: about 8 B per edge collected,
+  // 4 B per edge plus 12 B per node kept (≈0.35 GB transient at the
+  // caps), sized for a 4 GB driver
   val DriverNodeCap = Gate("spark.graft.graph.driverNodeCap", 4000000L, "nodes",
     "g40's distributed double sweep; g45's distributed FW-BW; g46's distributed round")
   val DriverEdgeCap = Gate("spark.graft.graph.driverEdgeCap", 16000000L, "edges",
     "g40's distributed double sweep; g45's distributed FW-BW")
-  // g45 trim: small waves probe a per-node adjacency, built after
-  // more than trimProbeAfter of them, that leaves out mega-hubs
-  val SccTrimAdjProbeCap = Gate("spark.graft.scc.trimAdjProbeCap", 65536L, "dead nodes",
-    "the wave's round scans the edge set twice")
-  val SccTrimHubDegCap = Gate("spark.graft.scc.trimHubDegCap", 1048576L, "neighbours",
-    "the hub stays out of the adjacency; a round where it dies scans edges")
-  val SccTrimProbeAfter = Gate("spark.graft.scc.trimProbeAfter", 2L, "small waves",
-    "until then small waves scan edges")
   // g33 peel: delta rounds after tiny waves, in-memory round
   // checkpoints, broadcast decrements
   val TrussDeltaWaveCap = Gate("spark.graft.truss.deltaWaveCap", 1024L, "wave edges",
@@ -54,7 +48,6 @@ object Regimes {
     "decrement rows", "the decrement is shuffle-joined")
 
   val gates: Seq[Gate] = Seq(GraphBroadcastCap, DriverNodeCap, DriverEdgeCap,
-    SccTrimAdjProbeCap, SccTrimHubDegCap, SccTrimProbeAfter,
     TrussDeltaWaveCap, TrussMemCkptCap, TrussDeltaDecBroadcastCap)
 
   /** Root of `GraphOps.checkpointRoot`: a path, not a gate. */

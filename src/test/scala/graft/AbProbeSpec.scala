@@ -41,7 +41,8 @@ class AbProbeSpec extends AnyFunSuite {
     // an unknown key would be ignored, timing the default regime as both A and B
     val ok = "spark.graft.graph.broadcastCap=0,spark.graft.checkpointDir=/tmp/x,a.b=1"
     assert(AbProbe.parseConfs(ok).size === 3)
-    Seq("spark.graft.loop.aqe=true", "spark.graft.graph.driverNodeCap=4M").foreach { bad =>
+    Seq("spark.graft.loop.aqe=true", "spark.graft.scc.trimAdjProbeCap=0",
+        "spark.graft.graph.driverNodeCap=4M").foreach { bad =>
       val err = intercept[IllegalArgumentException](AbProbe.parseConfs(s"a.b=1,$bad"))
       assert(err.getMessage.contains(bad.takeWhile(_ != '=')), err.getMessage)
     }

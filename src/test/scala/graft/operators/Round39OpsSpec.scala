@@ -4,12 +4,16 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.graph.GraphOps
+import graft.util.Regimes
 
 /** Laws for the g45/g46 batch.
   *
-  * g45 SCC: (1) on a hand graph with known SCC structure, sccOf must
-  * equal the textbook answer — pinning the FW-BW definition (SCC of a
-  * pivot = forward-reach ∩ backward-reach); (2) at sf0.001 the full
+  * g45 SCC: (1) on hand graphs with known SCC structure (a
+  * self-loop, duplicated edges, a cycle entered past its min member,
+  * an all-DAG graph), sccOf must equal the textbook answer on both the
+  * driver Tarjan and the distributed FW-BW path — pinning the FW-BW
+  * definition (SCC of a pivot = forward-reach ∩ backward-reach) and
+  * the min-member id; (2) at sf0.001 the full
   * output must equal an independent in-memory Kosaraju run over the
   * collected edge list (a third algorithm, after Spark's trim+FW-BW
   * and the oracle's recursive closure).
@@ -28,32 +32,51 @@ class Round39OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("g45: sccOf on a hand graph equals forward∩backward reach") {
     import spark.implicits._
+    // the definitional cross-check: u's scc id is the least v with
+    // u == v or u reaching v AND v reaching u; each graph also runs
+    // with the driver caps at 0, through the distributed FW-BW
+    def sccAgreesWithReach(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val adj = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+      def reach(s: Long): Set[Long] = {
+        var seen = Set.empty[Long]
+        var f = List(s)
+        while (f.nonEmpty) {
+          val n = f.head; f = f.tail
+          adj.getOrElse(n, Nil).foreach { m =>
+            if (!seen(m)) { seen += m; f ::= m } }
+        }
+        seen
+      }
+      val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+      val reaches = nodes.map(u => u -> reach(u)).toMap
+      val want = nodes.map(u =>
+        u -> nodes.filter(v => u == v || (reaches(u)(v) && reaches(v)(u))).min).toMap
+      val overCap = Seq(Regimes.DriverNodeCap, Regimes.DriverEdgeCap).map(_.key -> "0")
+      Seq("driver" -> Nil, "over-cap" -> overCap).foreach { case (path, confs) =>
+        val got = graft.AbProbe.withConfs(spark, confs)(GraphOps.sccOf(edges.toDF("src", "dst"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+        assert(got == want, s"$path path on $edges")
+      }
+      want
+    }
     // 1→2→3→1 (SCC {1,2,3}), 3→4, 4→5→6→5 (SCC {5,6}), 4 and 7
     // singletons, 7→1 (an in-edge to a cycle, stays singleton)
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
-      (5L, 6L), (6L, 5L), (7L, 1L)).toDF("src", "dst")
-    val got = GraphOps.sccOf(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
-      5L -> 5L, 6L -> 5L, 7L -> 7L)
-    assert(got == want)
-    // the definitional cross-check on the same graph: u,v share an
-    // scc id iff u reaches v AND v reaches u
-    val adj = Map(1L -> Seq(2L), 2L -> Seq(3L), 3L -> Seq(1L, 4L),
-      4L -> Seq(5L), 5L -> Seq(6L), 6L -> Seq(5L), 7L -> Seq(1L))
-    def reach(s: Long): Set[Long] = {
-      var seen = Set.empty[Long]
-      var f = List(s)
-      while (f.nonEmpty) {
-        val n = f.head; f = f.tail
-        adj.getOrElse(n, Nil).foreach { m =>
-          if (!seen(m)) { seen += m; f ::= m } }
-      }
-      seen
-    }
-    for (u <- 1L to 7L; v <- 1L to 7L)
-      assert((got(u) == got(v)) ==
-        (u == v || (reach(u)(v) && reach(v)(u))), s"pair ($u,$v)")
+    assert(sccAgreesWithReach(Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
+      (5L, 6L), (6L, 5L), (7L, 1L))) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
+      5L -> 5L, 6L -> 5L, 7L -> 7L))
+    // 8's only edge is a self-loop: it survives the trim and is its own SCC
+    assert(sccAgreesWithReach(Seq((1L, 2L), (2L, 1L), (8L, 8L)))(8L) == 8L)
+    // a duplicated cycle edge and a duplicated edge into the sink 3,
+    // whose death takes both copies off 2's out-degree
+    assert(sccAgreesWithReach(Seq((1L, 2L), (1L, 2L), (2L, 1L), (2L, 3L), (2L, 3L)))
+      == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
+    // Tarjan roots at 1 and enters the cycle {20, 30, 40} at 30, so
+    // the cycle's min member 20 is not its first visited node
+    assert(sccAgreesWithReach(Seq((1L, 2L), (2L, 1L), (2L, 30L), (30L, 40L),
+      (40L, 20L), (20L, 30L))) == Map(1L -> 1L, 2L -> 1L, 20L -> 20L, 30L -> 20L, 40L -> 20L))
+    // an all-DAG graph: the trim empties the core, so no core path runs
+    assert(sccAgreesWithReach(Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)))
+      .forall { case (u, id) => u == id })
   }
 
   test("g45: gated output equals an in-memory Kosaraju at sf0.001") {

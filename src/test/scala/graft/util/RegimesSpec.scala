@@ -3,19 +3,17 @@ package graft.util
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.graph.GraphOps
 
-/** Pins the size-gate registry: the ten `spark.graft.*` keys, their
+/** Pins the size-gate registry: the seven `spark.graft.*` keys, their
   * defaults, and the one error a bad cap value raises at its read. */
 class RegimesSpec extends AnyFunSuite {
   private lazy val spark = graft.GraftSession.local(2, 2)
 
-  test("nine gates plus the checkpoint dir, each default as shipped") {
+  test("six gates plus the checkpoint dir, each default as shipped") {
     assert(Regimes.gates.map(g => g.key.stripPrefix("spark.graft.") -> g.default) === Seq(
       "graph.broadcastCap" -> 8000000L, "graph.driverNodeCap" -> 4000000L,
-      "graph.driverEdgeCap" -> 16000000L, "scc.trimAdjProbeCap" -> 65536L,
-      "scc.trimHubDegCap" -> 1048576L, "scc.trimProbeAfter" -> 2L,
-      "truss.deltaWaveCap" -> 1024L, "truss.memCkptCap" -> 16000000L,
-      "truss.deltaDecBroadcastCap" -> 1000000L))
-    assert((Regimes.gates.map(_.key) :+ Regimes.CheckpointDir).distinct.size === 10)
+      "graph.driverEdgeCap" -> 16000000L, "truss.deltaWaveCap" -> 1024L,
+      "truss.memCkptCap" -> 16000000L, "truss.deltaDecBroadcastCap" -> 1000000L))
+    assert((Regimes.gates.map(_.key) :+ Regimes.CheckpointDir).distinct.size === 7)
   }
 
   test("a non-numeric cap fails at its read, naming the key and the value") {
